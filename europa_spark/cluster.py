@@ -38,7 +38,21 @@ def connected_components(
     ``n_edges_hint``: undirected edge count if the caller already knows it
     (e.g. from a materialized pair table) — skips one count job and lets the
     adjacency be built with its loop partitioning in a single pass.
+
+    The result is backed by the final round's local checkpoint, whose
+    blocks Spark's ContextCleaner reclaims once the frame is garbage
+    collected; callers that free storage explicitly use
+    ``tracked_connected_components``.
     """
+    return tracked_connected_components(pairs, max_iter, n_edges_hint)[0]
+
+
+def tracked_connected_components(
+    pairs: DataFrame, max_iter: int = 25, n_edges_hint: int | None = None
+) -> tuple[DataFrame, set]:
+    """connected_components + the persistent-RDD ids of the checkpoint
+    backing the result, for a caller that unpersists them once it is done
+    with the frame (pipeline.run's release())."""
     edges = pairs.select("url_a", "url_b").distinct()
     # symmetric adjacency (undirected graph as two directed edges)
     adj = edges.unionByName(
@@ -155,7 +169,7 @@ def _init_labels(adj: DataFrame) -> DataFrame:
     )
 
 
-def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
+def _cc_loop(adj: DataFrame, max_iter: int) -> tuple[DataFrame, set]:
     spark = adj.sparkSession
 
     # ONE blocking job per round: labels are never materialized on their own
@@ -205,10 +219,12 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> DataFrame:
         _unpersist_ids(spark, prev_ids)
         prev_ids = step_ids
         if changed == 0:
-            # stepped IS the fixpoint label table (checkpointed; its blocks
-            # are reclaimed by the ContextCleaner when the returned frame is
-            # garbage-collected, exactly like the old per-round checkpoints)
-            return stepped.select("url", F.col("label").alias("cluster_id"))
+            # stepped IS the fixpoint label table (checkpointed; its ids go
+            # to the caller, which owns the blocks from here on)
+            return (
+                stepped.select("url", F.col("label").alias("cluster_id")),
+                step_ids,
+            )
         # pointer doubling: also adopt my label's label — turns the
         # O(diameter) propagation into O(log diameter) rounds. Lazy: the
         # NEXT round's convergence count materializes it off the stepped

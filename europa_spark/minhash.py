@@ -106,7 +106,9 @@ def _tokenize_hashed(
     import pyarrow.compute as pc
 
     cache = {} if cache is None else cache
-    arr = pa.array(texts, type=pa.string())
+    # 64-bit offsets: a batch over 2 GiB of text fits (pa.string() raises
+    # ArrowCapacityError there)
+    arr = pa.array(texts, type=pa.large_string())
     toks = pc.split_pattern(arr, " ")
     lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
     enc = pc.list_flatten(toks).dictionary_encode()
@@ -458,15 +460,12 @@ def _candidate_pairs(
         .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
         .filter(F.col("bucket_n") >= 2)
     ).persist()
-    # barrier-vs-race, measured both ways (r6): skipping this count (and the
-    # pruned/rare barriers) wins ~0.2-0.4 s/query at sf0.1 where the barrier
-    # is pure job overhead, but LOSES at 200k docs (interleaved pipeline A/B
-    # min 16.1 eager vs 17.1 lazy) — the racing query stages duplicate real
-    # exchange bytes there. Barrier stays the default (the bench's larger
-    # corpora are the binding case); the env hook preserves the experiment.
-    import os as _os
-    if _os.environ.get("EUROPA_LAZY_STATS") != "1":
-        stats.count()
+    # barrier-vs-race, measured both ways (OPTIMIZATION_r06.md, "Barriers
+    # kept"): skipping this count (and the pruned/rare barriers) wins
+    # ~0.2-0.4 s/query at sf0.1 where the barrier is pure job overhead, but
+    # LOSES at 200k docs — the racing query stages duplicate real exchange
+    # bytes there, and the bench's larger corpora are the binding case
+    stats.count()
     if registry is not None:
         registry.append(stats)
     sized = bands.join(stats, ["band_idx", "band_hash"])
@@ -683,9 +682,7 @@ def _verify_pairs(
         pruned = sigs.select("url", "extracted").join(
             maybe_broadcast(needed, cfg), "url", "left_semi"
         ).persist()
-        import os as _os
-        if _os.environ.get("EUROPA_LAZY_PRUNED") != "1":
-            pruned.count()  # both text joins consume this — don't race the scan
+        pruned.count()  # both text joins consume this — don't race the scan
         if registry is not None:
             registry.append(pruned)
         pj = make_pair_jaccard_udf(cfg)

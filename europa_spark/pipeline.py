@@ -26,7 +26,7 @@ from .cluster import (
     _tracked_local_checkpoint,
     _unpersist_ids,
     cluster_members,
-    connected_components,
+    tracked_connected_components,
 )
 from .config import DedupConfig, CANONICAL
 from .exact import content_hash_col, exact_pairs, exact_membership
@@ -218,12 +218,8 @@ def run(
         # trailing tasks find the block already cached and skip compute.
         # An eager count() barrier here removes the race but serializes the
         # fill — interleaved A/B measured it SLOWER everywhere warm
-        # (sf0.1: 4.87 lazy vs 5.15 eager; 1M same-session toggle:
-        # 45.3 lazy vs 50.9 eager min-of-2), so the fill stays lazy.
-        if _os.environ.get("EUROPA_EAGER_CLEAN") == "1":  # diagnosis hook
-            spark.sparkContext.setJobDescription("europa:extract_clean")
-            clean.count()
-            spark.sparkContext.setJobDescription(None)
+        # (OPTIMIZATION_r06.md, "Clean-cache fill race"), so the fill stays
+        # lazy.
     finally:
         if tracker is not None:
             tracker.end("extract_clean", _t0)
@@ -380,12 +376,17 @@ def run(
         ),
     )
 
-    # pairs is already materialized, so its count is a cached-metadata job;
-    # the hint lets union-find build its right-sized adjacency in one pass
-    components = stage(
-        "components",
-        lambda: connected_components(pairs, n_edges_hint=pairs.count()),
-    )
+    def _components() -> DataFrame:
+        # pairs is already materialized, so its count is a cached-metadata
+        # job; the hint lets union-find build its right-sized adjacency in
+        # one pass. The result's checkpoint is freed by release().
+        out, ids = tracked_connected_components(
+            pairs, n_edges_hint=pairs.count()
+        )
+        ckpt_ids.update(ids)
+        return out
+
+    components = stage("components", _components)
     # outputs read (url, warc_ts) from the NARROW persisted membership frame
     # (1:1 with clean — a window adds columns, drops no rows), NOT from the
     # wide clean cache: at multi-million-row scale the text cache is the

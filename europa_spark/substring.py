@@ -38,17 +38,20 @@ _INV_BASE = _U64(pow(int(_ROLL_BASE), -1, 1 << 64))
 WINNOW_MAX_DF = 1000  # stop-fingerprint document-frequency cap
 
 # data-independent power tables, grown on demand and cached:
-# _POW_TABLES = [inv_pows, base_pows] with inv_pows[i] = base^-i,
-# base_pows[i] = base^i (both mod 2^64)
-_POW_TABLES: list[np.ndarray] = [
+# _POW_TABLES = (inv_pows, base_pows) with inv_pows[i] = base^-i,
+# base_pows[i] = base^i (both mod 2^64). Rebound as ONE tuple, never
+# mutated: a reader always sees both tables from the same generation.
+_POW_TABLES: tuple[np.ndarray, np.ndarray] = (
     np.array([1], dtype=_U64),
     np.array([1], dtype=_U64),
-]
+)
 
 
 def _powers(n: int) -> tuple[np.ndarray, np.ndarray]:
-    if len(_POW_TABLES[0]) < n:
-        m = max(n, 2 * len(_POW_TABLES[0]))
+    global _POW_TABLES
+    tables = _POW_TABLES
+    if len(tables[0]) < n:
+        m = max(n, 2 * len(tables[0]))
         inv = np.empty(m, dtype=_U64)
         inv[0] = 1
         np.cumprod(np.full(m - 1, _INV_BASE, dtype=_U64), out=inv[1:])
@@ -60,9 +63,9 @@ def _powers(n: int) -> tuple[np.ndarray, np.ndarray]:
         # that size in every long-lived worker would hold 16 B/byte-of-
         # largest-doc forever — compute-and-discard beyond 16x chunk
         if m <= 16 * _CHUNK_CHARS:
-            _POW_TABLES[0], _POW_TABLES[1] = inv, pb
+            _POW_TABLES = (inv, pb)
         return inv, pb
-    return _POW_TABLES[0], _POW_TABLES[1]
+    return tables
 
 
 def _sliding_min(h: np.ndarray, w: int) -> np.ndarray:
@@ -276,9 +279,7 @@ def _substring_pairs(
         .filter((F.col("count") > 1) & (F.col("count") <= max_df))
         .select("fp")
     ).persist()
-    import os as _os
-    if _os.environ.get("EUROPA_LAZY_RARE") != "1":
-        rare.count()
+    rare.count()
     if registry is not None:
         registry.append(rare)
     # SHUFFLE_HASH on the RARE side only: a sort-merge plan here SORTS the

@@ -136,10 +136,16 @@ def test_release_unpersists_everything(spark, docs_df):
     assert cached_ids() - before, "run should have cached frames"
     out["release"]()
     leftover = cached_ids() - before
-    # the ONLY surviving block may be the union-find result's final local
-    # checkpoint — it backs the returned components/clusters DataFrames and
-    # is reclaimed by Spark's ContextCleaner once `out` is dropped
-    assert len(leftover) <= 1, leftover
+    assert not leftover, leftover
+
+
+def test_memory_page_size_does_not_follow_heap(spark):
+    """Tungsten pages stay small on the fixture's 4g driver: a page size
+    derived from the heap (32 MB here, 64 MB at 24g) gives every hash
+    aggregate, join and sort of every tiny task a humongous zero-filled
+    page."""
+    mm = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert mm.pageSizeBytes() <= 4 * 1024 * 1024, mm.pageSizeBytes()
 
 
 def test_job_group_cancellation(spark):
