@@ -14,15 +14,9 @@ Reference semantics being preserved:
 Scale design (north rule: explicit skew handling):
   * signatures are computed once per DISTINCT content (caller passes the
     representatives set, europa_spark.exact.representatives);
-  * band buckets above ``cfg.bucket_cap`` are routed to linear star edges
-    (member -> bucket min) plus all-pairs within ``cfg.salt_sub_cap``-sized
-    salted sub-buckets instead of the quadratic all-pairs self-join — a
-    10k-member near-dup bucket yields ~10k + 32*10k candidates per band,
-    not 50M; buckets above ``cfg.star_only_cap`` (mega boilerplate cliques)
-    keep star edges only (FIXTURES.md §1 block E is the adversarial
-    fixture; tools/skew_bench.py is the bench-scale one);
-  * sub-cap buckets go through a plain equi-join; AQE skew-join splitting
-    handles residual per-key hotness;
+  * candidates come from the one skew-routed band join, bands.banded_pairs
+    (hot buckets: star edges + salted sub-buckets; mega buckets: star edges
+    only — the recall and fan-out argument lives in that module);
   * all shuffled relations are narrow (ids + 64-bit hashes); the wide
     ``shingles`` arrays are only joined in at the final verify step.
 """
@@ -38,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
 
 
@@ -195,7 +190,6 @@ def _minhash_of(
     a: np.ndarray,
     b: np.ndarray,
     num_perm: int,
-    max_cells: int | None = None,  # kept for call-site compat; unused
 ) -> list[list[int]]:
     """MinHash signatures for a list of shingle-hash arrays.
 
@@ -244,26 +238,6 @@ def _minhash_of(
     return out
 
 
-def make_minhash_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    a, b = _perm_params(cfg)
-    num_perm = cfg.num_perm
-    max_cells = 4_000_000
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_sig(shingles: pd.Series) -> pd.Series:
-        arrs = [
-            np.asarray(s, dtype=np.int64).view(_U64)
-            if s is not None and len(s) > 0
-            else np.empty(0, dtype=_U64)
-            for s in shingles
-        ]
-        return pd.Series(_minhash_of(arrs, a, b, num_perm, max_cells), dtype=object)
-
-    return minhash_sig
-
-
 def make_signature_udf(cfg: DedupConfig = CANONICAL):
     """Fused shingles+minhash in ONE pandas UDF (single Arrow round-trip;
     the shingle arrays never cross JVM<->Python twice)."""
@@ -272,12 +246,11 @@ def make_signature_udf(cfg: DedupConfig = CANONICAL):
     k = cfg.shingle_k
     a, b = _perm_params(cfg)
     num_perm = cfg.num_perm
-    max_cells = 4_000_000
 
     @pandas_udf("shingles array<bigint>, minhash array<bigint>")
     def signature(text: pd.Series) -> pd.DataFrame:
         arrs = _batch_shingle_hashes([t if t is not None else "" for t in text], k)
-        mins = _minhash_of(arrs, a, b, num_perm, max_cells)
+        mins = _minhash_of(arrs, a, b, num_perm)
         # ndarray values: Arrow's fast path, no per-element int boxing
         return pd.DataFrame(
             {
@@ -396,110 +369,17 @@ def band_table(sigs: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
 def candidate_pairs(
     bands: DataFrame, cfg: DedupConfig = CANONICAL, registry: list | None = None
 ) -> DataFrame:
-    """Distinct candidate (url_a < url_b) pairs from band collisions.
+    """Distinct candidate (url_a < url_b) pairs from band collisions: the
+    band table through the skew-routed band join (bands.banded_pairs, which
+    holds the hot/mega bucket routing and its recall argument).
 
-    Buckets <= bucket_cap: all-pairs equi self-join (J2). Oversized buckets
-    (explicit skew cap, north rule) are SALTED into ceil(n/salt_sub_cap)
-    sub-buckets of ~salt_sub_cap members with all-pairs inside each salt,
-    PLUS linear star edges to the bucket minimum — work per hot bucket is
-    O(n * salt_sub_cap) instead of O(n^2). Buckets above star_only_cap emit
-    star edges ONLY (see config.star_only_cap). Recall: mutually-similar members that are NOT similar to the
-    bucket min keep their direct edge whenever they share a salt (and any
-    other band); the star edges keep whole-bucket connectivity through the
-    representative. Residual loss — a similar pair whose EVERY shared band
-    is hot and salted apart — is the documented trade vs the reference's
-    unbounded radius search (adversarial fixture: tests/test_minhash.py).
-
-    ``registry=None`` (direct API calls): intermediates are unpersisted on
-    return — the returned lazy plan recomputes them per consumer action.
-    Pass a registry to keep them cached across consumers and unpersist when
-    done (the pipeline/_drained pattern); r4 ADVICE: the old behavior left
-    them cached for the session lifetime.
+    ``registry=None`` (direct API calls): nothing is cached, the result is
+    a lazy plan. Pass a registry to cache the band table and bucket stats
+    across consumers and unpersist them when done (the pipeline/_drained
+    pattern).
     """
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _candidate_pairs(bands, cfg, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig, registry: list
-) -> DataFrame:
-    # CACHE the band table ONCE, pre-partitioned on the bucket key:
-    # event-log profiling (tools/spark_stage_detail.py, 1M rows) caught the
-    # lazy band subtree re-reading the wide signature cache and re-writing
-    # its own ~340 MB exchange SIX times — once per downstream reference
-    # (stats agg, sized join, and the normal/hot splits) — because AQE does
-    # not reuse exchanges across separate DataFrame references. One
-    # repartition exchange at persist time makes the stats aggregation and
-    # every sized/normal/hot branch join exchange-free
-    # (HashPartitioning(band_idx, band_hash) satisfies each downstream
-    # distribution; only the salted hot-bucket join re-keys).
-    bands = bands.repartition("band_idx", "band_hash").persist()
-    if registry is not None:
-        registry.append(bands)
-    # bucket stats via hash aggregation (map-side partial combine), NOT a
-    # window: a window would shuffle+sort the full bands table, while the
-    # aggregate shuffles one compact row per distinct bucket and the filter
-    # drops the singleton buckets (the vast majority) before the join.
-    #
-    # ONE barrier job materializes bands AND stats (stats is the bands
-    # cache's first consumer, so the lazy persist fills en route — no racing
-    # consumers): the r5 shape spent three blocking jobs here (bands count,
-    # then a persisted `sized` copy of the whole joined band table, counted
-    # again). `sized` is now lazy — each branch streams the bands cache and
-    # hash-probes the small cached stats side, exchange-free and without a
-    # second band-table-sized block-store copy.
-    stats = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    ).persist()
-    # barrier-vs-race, measured both ways (OPTIMIZATION_r06.md, "Barriers
-    # kept"): skipping this count (and the pruned/rare barriers) wins
-    # ~0.2-0.4 s/query at sf0.1 where the barrier is pure job overhead, but
-    # LOSES at 200k docs — the racing query stages duplicate real exchange
-    # bytes there, and the bench's larger corpora are the binding case
-    stats.count()
-    if registry is not None:
-        registry.append(stats)
-    sized = bands.join(stats, ["band_idx", "band_hash"])
-    normal = sized.filter(F.col("bucket_n") <= cfg.bucket_cap).select(
-        "band_idx", "band_hash", "url"
-    )
-    a = normal.alias("a")
-    b = normal.alias("b")
-    normal_pairs = a.join(b, ["band_idx", "band_hash"]).filter(
-        F.col("a.url") < F.col("b.url")
-    ).select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    hot = sized.filter(F.col("bucket_n") > cfg.bucket_cap).select(
-        "band_idx", "band_hash", "url", "bucket_min", "bucket_n",
-        F.pmod(F.xxhash64("url", "band_idx", "band_hash"), n_salts).alias("salt"),
-    )
-    # star edges for EVERY over-cap bucket (connectivity through the anchor)
-    hot_star = hot.filter(F.col("url") != F.col("bucket_min")).select(
-        F.col("bucket_min").alias("url_a"), F.col("url").alias("url_b")
-    )
-    # salted sub-bucket all-pairs only BELOW star_only_cap: above it (mega
-    # buckets — web-scale boilerplate cliques) the salted work n*cap/2 per
-    # band dwarfs any recall it buys, and star edges alone already give full
-    # CLUSTER recall for a true near-dup clique (see config.star_only_cap)
-    salted = hot.filter(F.col("bucket_n") <= cfg.star_only_cap)
-    ha = salted.select("band_idx", "band_hash", "salt", "url").alias("ha")
-    hb = salted.select("band_idx", "band_hash", "salt", "url").alias("hb")
-    hot_salt_pairs = (
-        ha.join(hb, ["band_idx", "band_hash", "salt"])
-        .filter(F.col("ha.url") < F.col("hb.url"))
-        .select(F.col("ha.url").alias("url_a"), F.col("hb.url").alias("url_b"))
-    )
-    return normal_pairs.unionByName(hot_star).unionByName(hot_salt_pairs).distinct()
+    index = bands.withColumnRenamed("band_hash", "band_key")
+    return banded_pairs(index, cfg, registry=registry)
 
 
 def estimated_jaccard_col(mh_a, mh_b, num_perm: int):
@@ -655,7 +535,7 @@ def verify_pairs(
 
     ``registry=None``: intermediates unpersist on return (recompute per
     consumer); pass a registry to cache across consumers (see
-    candidate_pairs)."""
+    minhash_pairs)."""
     own = registry is None
     if own:
         registry = []
@@ -744,7 +624,9 @@ def incremental_minhash_pairs(
 
     Returns (new_sigs, new_pairs): new_pairs touches at least one new doc —
     probes are ONLY the new docs' bands, joined against the full band index
-    (old pairs among existing docs are already in the checkpoint).
+    (old pairs among existing docs are already in the checkpoint). The
+    index grows with the whole corpus, so its hot buckets are capped exactly
+    like the batch path (bands.banded_pairs, incremental mode).
     """
     # localCheckpoint: the shingle+minhash UDF subtree feeds four consumers
     # (probe bands, the accumulated index union, the verify shingle join,
@@ -754,83 +636,11 @@ def incremental_minhash_pairs(
     new_sigs = with_signatures(new_reps, cfg).localCheckpoint()
     cols = ["url", "shingles", "minhash"]
     all_sigs = existing_sigs.select(*cols).unionByName(new_sigs.select(*cols))
-    probes = band_table(new_sigs, cfg)
-    index = band_table(all_sigs, cfg)
-    # index-side hot buckets are capped (same cap as the batch path): the
-    # index grows with the whole corpus, so an uncapped equi-join would let
-    # one degenerate bucket make per-batch fan-out corpus-proportional
-    # (r3 ADVICE #3). A probe landing in a hot bucket pairs with (a) the
-    # bucket min — the star anchor that keeps whole-bucket connectivity —
-    # and (b) the members of its own SALTED sub-bucket, mirroring the batch
-    # path's hot_salt_pairs (r4 ADVICE #1: star-only routing silently lost
-    # the direct edge to a non-anchor near-dup). Same salt formula as
-    # candidate_pairs, so a probe meets exactly the members it would share a
-    # salt with in a batch run over the accumulated corpus; per-probe
-    # fan-out stays bounded at bands * (cap + salt_sub_cap + 1). NOTE the residual batch/
-    # incremental delta on hot buckets: n_salts derives from the bucket size
-    # AT PROBE TIME, which grows across batches, so sub-bucket membership
-    # (not connectivity, and not the verified-pair threshold) can differ
-    # from a one-shot batch run — tests/test_incremental.py pins the salted
-    # semantics and the cluster-level equivalence.
-    stats = (
-        index.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_n"), F.min("url").alias("bucket_min"))
-        .filter(F.col("bucket_n") >= 2)
-    )
-    sized = index.join(stats, ["band_idx", "band_hash"])
-    n_salts = F.ceil(F.col("bucket_n") / F.lit(cfg.salt_sub_cap)).cast("int")
-    capped_index = (
-        sized.filter(F.col("bucket_n") <= cfg.bucket_cap)
-        .select("band_idx", "band_hash", "url")
-        .unionByName(
-            sized.filter(
-                (F.col("bucket_n") > cfg.bucket_cap)
-                & (F.col("url") == F.col("bucket_min"))
-            ).select("band_idx", "band_hash", "url")
-        )
-    )
-    plain_cands = (
-        probes.alias("a")
-        .join(capped_index.alias("b"), ["band_idx", "band_hash"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(F.col("a.url").alias("pa"), F.col("b.url").alias("pb"))
-    )
-    hot_index = sized.filter(
-        (F.col("bucket_n") > cfg.bucket_cap)
-        & (F.col("bucket_n") <= cfg.star_only_cap)
-    ).select(
-        "band_idx", "band_hash", "url",
-        F.pmod(F.xxhash64("url", "band_idx", "band_hash"), n_salts).alias("salt"),
-    )
-    hot_probes = (
-        probes.join(
-            stats.filter(
-                (F.col("bucket_n") > cfg.bucket_cap)
-                & (F.col("bucket_n") <= cfg.star_only_cap)
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .select(
-            "band_idx", "band_hash", "url",
-            F.pmod(
-                F.xxhash64("url", "band_idx", "band_hash"), n_salts
-            ).alias("salt"),
-        )
-    )
-    salt_cands = (
-        hot_probes.alias("a")
-        .join(hot_index.alias("b"), ["band_idx", "band_hash", "salt"])
-        .filter(F.col("a.url") != F.col("b.url"))
-        .select(F.col("a.url").alias("pa"), F.col("b.url").alias("pb"))
-    )
-    cands = (
-        plain_cands.unionByName(salt_cands)
-        .select(
-            F.least("pa", "pb").alias("url_a"),
-            F.greatest("pa", "pb").alias("url_b"),
-        )
-        .distinct()
-    )
+
+    def index(sigs):
+        return band_table(sigs, cfg).withColumnRenamed("band_hash", "band_key")
+
+    cands = banded_pairs(index(all_sigs), cfg, probes=index(new_sigs))
     if existing_pairs is not None:
         # already-done exclusion (the MatchExcept anti-join, J4)
         cands = cands.join(
@@ -867,7 +677,7 @@ def minhash_pairs(
     ``registry``: optional list collecting every DataFrame persisted here so
     the caller can unpersist them when done (pipeline.run's release()).
     With ``registry=None`` the intermediates are unpersisted on return and
-    the lazy result recomputes them per consumer (see candidate_pairs)."""
+    the lazy result recomputes them per consumer."""
     own = registry is None
     if own:
         registry = []

@@ -207,7 +207,7 @@ def substring_pairs(
 
     ``registry=None``: intermediates unpersist on return (recompute per
     consumer); pass a registry to cache across consumers (see
-    minhash.candidate_pairs).
+    minhash.minhash_pairs).
     """
     own = registry is None
     if own:

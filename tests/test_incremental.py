@@ -41,7 +41,7 @@ def test_incremental_equals_batch(spark, split_reps):
 def test_incremental_hot_bucket_salted_probe(spark):
     """r4 ADVICE #1: a probe landing in a HOT index bucket must pair with
     the star anchor AND with every index member sharing its salted
-    sub-bucket (mirroring the batch path's hot_salt_pairs) — the r4 code
+    sub-bucket (mirroring the batch path's salted sub-bucket pairs) — the r4 code
     paired hot-bucket probes with the anchor only, silently losing the
     direct edge to a non-anchor near-dup. Pinned exactly: expected set is
     recomputed here from the same salt formula."""

@@ -17,6 +17,8 @@ from europa_spark.minhash import (
     verify_pairs,
     with_signatures,
 )
+from europa_spark.multimodal import media_blockmean_pairs
+from europa_spark.simhash import simhash_pairs
 
 
 @pytest.fixture(scope="module")
@@ -128,6 +130,19 @@ def test_hot_bucket_mutual_pairs_survive_salting(spark):
         degree[a] += 1
         degree[b] += 1
     assert max(degree[m] for m in members[1:]) <= 2 * cfg.bucket_cap
+    # the batch simhash band join routes the same way: one shared signature
+    # puts all 8 urls in one hot bucket of each of its 4 bands; the star
+    # edges carry the anchor's signature from the bucket stats (a missing
+    # anchor payload would fail the Hamming verify and drop them)
+    sigs = spark.createDataFrame(
+        [(u, 7) for u in members], "url string, simhash bigint"
+    )
+    got = {
+        (r["url_a"], r["url_b"])
+        for r in simhash_pairs(None, cfg, sigs=sigs).collect()
+    }
+    assert star <= got
+    assert got - star, "simhash salted sub-buckets must emit member pairs"
 
 
 def test_band_join_is_narrow(spark, sigs):
@@ -174,9 +189,10 @@ def test_verify_strategy_and_margin_equivalence(spark, reps):
 
 def test_mega_bucket_star_only(spark):
     """Buckets above cfg.star_only_cap (web-scale boilerplate cliques) keep
-    star edges but skip salted sub-bucket pairs — the salted work would be
-    n*cap/2 per band while star edges alone give full cluster recall for a
-    true near-dup clique (config.star_only_cap rationale)."""
+    star edges but skip salted sub-bucket pairs, in every band join — the
+    salted work would be n*cap/2 per band while star edges alone give full
+    cluster recall for a true near-dup clique (config.star_only_cap
+    rationale)."""
     cfg = DedupConfig(bucket_cap=2, star_only_cap=4)
     bands = spark.createDataFrame(
         [(f"m{i}", 0, 42) for i in range(8)],
@@ -185,4 +201,24 @@ def test_mega_bucket_star_only(spark):
     rows = {
         (r["url_a"], r["url_b"]) for r in candidate_pairs(bands, cfg).collect()
     }
-    assert rows == {("m0", f"m{i}") for i in range(1, 8)}
+    star = {("m0", f"m{i}") for i in range(1, 8)}
+    assert rows == star
+    # the simhash and blockmean band joins follow the same caps. SimHash:
+    # the 8 signatures share bands 0-2 (one mega bucket each) and differ in
+    # bits 60-62, so each star pair's score pins the ANCHOR's signature
+    # (m0's, from the bucket stats), not the member's own
+    sh = spark.createDataFrame(
+        [(f"m{i}", 7 | (i << 60)) for i in range(8)], "url string, simhash bigint"
+    )
+    got = simhash_pairs(None, cfg, sigs=sh).collect()
+    assert {
+        (r["url_a"], r["url_b"], r["score"]) for r in got
+    } == {("m0", f"m{i}", (64 - bin(i).count("1")) / 64) for i in range(1, 8)}
+    # block-mean: one shared signature puts all 8 urls in one mega bucket
+    # of every band
+    bm = spark.createDataFrame(
+        [(f"m{i}", "a5" * 121) for i in range(8)], "url string, blockmean string"
+    )
+    got = media_blockmean_pairs(bm, cfg=cfg).collect()
+    assert {(r["url_a"], r["url_b"]) for r in got} == star
+    assert all(r["score"] == 1.0 for r in got)

@@ -9,9 +9,18 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, so an A/B copy checks its own library:
+# sys.path for the driver, PYTHONPATH for the Python UDF workers (read when
+# the SparkContext starts)
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
