@@ -148,6 +148,23 @@ def test_memory_page_size_does_not_follow_heap(spark):
     assert mm.pageSizeBytes() <= 4 * 1024 * 1024, mm.pageSizeBytes()
 
 
+def test_driver_young_gen_follows_heap(spark):
+    """The driver JVM's G1 young gen is fixed at a tenth of the heap the
+    session asked for (4g here, not the 24g default), and its regions are
+    large enough that a 4 MB page is not a humongous object."""
+    jvm = spark._jvm
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+
+    def mb(flag):
+        return int(diag.getVMOption(flag).getValue()) // 2**20
+
+    assert mb("G1HeapRegionSize") == 16
+    # G1 rounds the young gen down to whole regions
+    for flag in ("NewSize", "MaxNewSize"):
+        assert 4096 // 10 - 16 < mb(flag) <= 4096 // 10, (flag, mb(flag))
+
+
 def test_job_group_cancellation(spark):
     """CancellationToken analog: cancelling the job group aborts an
     in-flight action quickly instead of letting it run to completion."""
