@@ -5,7 +5,7 @@ NOT the driver bench — bench.py is frozen. This script:
     a lazy frame; the checkpointing queries time the materialization as
     bench.py does),
   * captures .explain("formatted") for each query into plans/<tag>/,
-  * optionally runs the full pipeline with EUROPA_STAGE_TIMING=1 for a
+  * optionally runs the full pipeline with a ProgressTracker for a
     stage-level breakdown.
 
 Usage:
@@ -148,10 +148,16 @@ def cmd_time(names: list[str]) -> None:
     spark.stop()
 
 
+def _print_stage_end(ev) -> None:
+    if ev.kind == "end":
+        print(f"STAGE {ev.stage}: {ev.wall_ms / 1000:.2f}s",
+              file=sys.stderr, flush=True)
+
+
 def cmd_stages(corpus: bool) -> None:
-    os.environ["EUROPA_STAGE_TIMING"] = "1"
     from europa_spark.pipeline import run
     from europa_spark.adapters import load_canonical
+    from europa_spark.progress import ProgressTracker
 
     spark = _session()
     reps = int(os.environ.get("EUROPA_EXTRA_REPS", "2"))
@@ -165,7 +171,7 @@ def cmd_stages(corpus: bool) -> None:
         else:
             docs = load_canonical(spark, SF_DIR)
         t0 = time.time()
-        out = run(docs)
+        out = run(docs, tracker=ProgressTracker(on_event=_print_stage_end))
         out["report"].count()
         out["clusters"].count()
         print(f"WALL rep{i}: {time.time()-t0:.2f}s", file=sys.stderr, flush=True)

@@ -8,8 +8,8 @@ Reference semantics being preserved:
   * radius similarity search with a threshold (QdrantRepository.cs:184-206)
     -> LSH band self-join, an equi-join by construction,
   * exact re-verification at the threshold (QdrantRepository.cs:192) ->
-    exact Jaccard on stored shingle-hash sets, computed JVM-side via
-    array_intersect/array_union (no Python in the verify hot path).
+    exact Jaccard over the shingle-hash sets, recomputed from the candidate
+    docs' text in one vectorized kernel (verify_pairs).
 
 Scale design (north rule: explicit skew handling):
   * signatures are computed once per DISTINCT content (caller passes the
@@ -17,8 +17,9 @@ Scale design (north rule: explicit skew handling):
   * candidates come from the one skew-routed band join, bands.banded_pairs
     (hot buckets: star edges + salted sub-buckets; mega buckets: star edges
     only — the recall and fan-out argument lives in that module);
-  * all shuffled relations are narrow (ids + 64-bit hashes); the wide
-    ``shingles`` arrays are only joined in at the final verify step.
+  * all shuffled relations are narrow (ids + 64-bit hashes); the text is
+    only joined in at the final verify step, for candidate docs only, and
+    the shingle sets derived from it never leave the Python worker.
 """
 
 from __future__ import annotations
@@ -158,21 +159,6 @@ def _batch_shingle_hashes(texts: list[str], k: int) -> list[np.ndarray]:
     return out
 
 
-def make_shingle_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    k = cfg.shingle_k
-
-    @pandas_udf(ArrayType(LongType()))
-    def shingle_hashes(text: pd.Series) -> pd.Series:
-        arrs = _batch_shingle_hashes(
-            [t if t is not None else "" for t in text], k
-        )
-        return pd.Series([a.view(np.int64).tolist() for a in arrs])
-
-    return shingle_hashes
-
-
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """num_perm multiply-shift hash params, seeded (FIXTURES.md §3 seed=42).
     Universal family h_i(x) = a_i*x + b_i mod 2^64 with odd a_i."""
@@ -236,30 +222,6 @@ def _minhash_of(
                 mi += 1
         i = j
     return out
-
-
-def make_signature_udf(cfg: DedupConfig = CANONICAL):
-    """Fused shingles+minhash in ONE pandas UDF (single Arrow round-trip;
-    the shingle arrays never cross JVM<->Python twice)."""
-    from pyspark.sql.functions import pandas_udf
-
-    k = cfg.shingle_k
-    a, b = _perm_params(cfg)
-    num_perm = cfg.num_perm
-
-    @pandas_udf("shingles array<bigint>, minhash array<bigint>")
-    def signature(text: pd.Series) -> pd.DataFrame:
-        arrs = _batch_shingle_hashes([t if t is not None else "" for t in text], k)
-        mins = _minhash_of(arrs, a, b, num_perm)
-        # ndarray values: Arrow's fast path, no per-element int boxing
-        return pd.DataFrame(
-            {
-                "shingles": pd.Series([x.view(np.int64) for x in arrs], dtype=object),
-                "minhash": pd.Series(mins, dtype=object),
-            }
-        )
-
-    return signature
 
 
 def make_minhash_only_udf(cfg: DedupConfig = CANONICAL):
@@ -333,21 +295,20 @@ def with_dual_signatures(reps: DataFrame, cfg: DedupConfig = CANONICAL) -> DataF
 def with_signatures(
     reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
-    include_shingles: bool = True,
+    include_shingles: bool = False,
 ) -> DataFrame:
-    """reps(url, extracted, ...) -> + minhash ARRAY<BIGINT> (+ shingles
-    ARRAY<BIGINT> when ``include_shingles``). One fused Arrow round-trip;
-    everything else stays JVM-side. The pipeline path uses
-    ``include_shingles=False`` — narrow signatures scale with cores, wide
-    ones are DRAM-bound (see make_minhash_only_udf)."""
-    if not include_shingles:
-        mh = make_minhash_only_udf(cfg)
-        return reps.withColumn("minhash", mh(F.col("extracted")))
-    sig = make_signature_udf(cfg)
-    s = reps.withColumn("_sig", sig(F.col("extracted")))
-    return s.withColumn("shingles", F.col("_sig.shingles")).withColumn(
-        "minhash", F.col("_sig.minhash")
-    ).drop("_sig")
+    """reps(url, extracted, ...) -> + minhash ARRAY<BIGINT>. The shingle-hash
+    arrays stay in the Python worker: narrow signatures scale with cores,
+    wide ones are DRAM-bound (see make_minhash_only_udf), and the exact
+    verify recomputes shingles from the text (verify_pairs).
+    ``include_shingles`` must be False: no caller needs the arrays."""
+    if include_shingles:
+        raise ValueError(
+            "with_signatures emits no shingle arrays; verify_pairs rehashes "
+            "the extracted text"
+        )
+    mh = make_minhash_only_udf(cfg)
+    return reps.withColumn("minhash", mh(F.col("extracted")))
 
 
 def band_table(sigs: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
@@ -488,9 +449,8 @@ def make_pair_jaccard_udf(cfg: DedupConfig = CANONICAL):
     """Vectorized exact-Jaccard kernel over (text_a, text_b) pairs: both
     shingle sets are recomputed IN the kernel (chunked batch hasher, each
     distinct text in the batch shingled once — star-edge anchors repeat
-    across pairs) and only the double score leaves Python. Value-identical
-    to the JVM array_intersect/array_union path: same blake2b k-gram hash
-    chain, |A∩B|/|A∪B| over the same uint64 sets, IEEE double division."""
+    across pairs) and only the double score leaves Python: |A∩B|/|A∪B| over
+    the blake2b k-gram hash sets of with_signatures, IEEE double division."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
@@ -511,100 +471,46 @@ def verify_pairs(
     cfg: DedupConfig = CANONICAL,
     registry: list | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard confirmation of candidates (J3).
+    """Exact-Jaccard confirmation of candidates (J3), from ``sigs``'
+    (url, extracted) text.
 
-    ``sigs`` either carries a precomputed ``shingles`` column (incremental
-    resume path — JVM set algebra on the stored arrays), or carries
-    ``extracted`` text, in which case cfg.verify_strategy picks the data
-    movement:
+    Candidate pairs join the pruned TEXT (the pair table broadcast when
+    hinted, so the first join is map-side) and one vectorized kernel
+    (make_pair_jaccard_udf) recomputes both shingle sets per pair, emitting
+    only the score. The text (~2.5-4.2 KB/doc on webtext) is NARROWER than
+    the ~5.6 KB/doc shingle-hash arrays derived from it, and string pages
+    shuffle far cheaper than BIGINT-array rows — a verify that joined the
+    arrays measured 0.326 scaling efficiency at 1M rows, below the 0.41
+    DRAM ceiling (r3 VERDICT #2). Candidates are a small fraction of the
+    corpus (LSH radius-search selectivity), so pruning BEFORE any recompute
+    keeps wide data out of the signature stage entirely.
 
-      * 'rehash' (default): candidate pairs join the pruned TEXT (the pair
-        table broadcast when hinted, so the first join is map-side) and one
-        vectorized kernel recomputes both shingle sets per pair, emitting
-        only the score. The text (~2.5-4.2 KB/doc on webtext) is NARROWER
-        than the ~5.6 KB/doc shingle-hash arrays derived from it, and
-        string pages shuffle far cheaper than BIGINT-array rows — the
-        arrays variant of this stage measured 0.326 scaling efficiency at
-        1M rows, below the 0.41 DRAM ceiling (r3 VERDICT #2).
-      * 'arrays': recompute shingle arrays for candidate urls via UDF, then
-        JVM array_intersect/array_union through both pair joins.
-
-    Candidates are a small fraction of the corpus (LSH radius-search
-    selectivity), so pruning BEFORE any recompute keeps wide data out of
-    the signature stage entirely.
-
-    ``registry=None``: intermediates unpersist on return (recompute per
-    consumer); pass a registry to cache across consumers (see
-    minhash_pairs)."""
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _verify_pairs(candidates, sigs, cfg, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _verify_pairs(
-    candidates: DataFrame,
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    registry: list,
-) -> DataFrame:
+    ``registry=None``: nothing is cached, the result is a lazy plan. Pass a
+    registry to cache the pruned text behind one barrier job and unpersist
+    it when done (see minhash_pairs)."""
     # the hint ships only urls; cfg.broadcast_hints=False at scales where
     # the candidate url set outgrows broadcast (AQE plans the semi-join)
     needed = candidates.select(
         F.explode(F.array("url_a", "url_b")).alias("url")
     ).distinct()
-    if "shingles" not in sigs.columns and cfg.verify_strategy == "rehash":
-        pruned = sigs.select("url", "extracted").join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        ).persist()
+    pruned = sigs.select("url", "extracted").join(
+        maybe_broadcast(needed, cfg), "url", "left_semi"
+    )
+    if registry is not None:
+        registry.append(pruned.persist())
         pruned.count()  # both text joins consume this — don't race the scan
-        if registry is not None:
-            registry.append(pruned)
-        pj = make_pair_jaccard_udf(cfg)
-        a = pruned.select(
-            F.col("url").alias("url_a"), F.col("extracted").alias("text_a")
-        )
-        b = pruned.select(
-            F.col("url").alias("url_b"), F.col("extracted").alias("text_b")
-        )
-        j = (
-            maybe_broadcast(candidates, cfg)
-            .join(a, "url_a")
-            .join(b, "url_b")
-            .withColumn("score", pj(F.col("text_a"), F.col("text_b")))
-        )
-        return (
-            j.filter(F.col("score") >= F.lit(cfg.jaccard_threshold))
-            .select("url_a", "url_b", F.lit("minhash").alias("method"), "score")
-        )
-    if "shingles" in sigs.columns:
-        sh = sigs.select(F.col("url"), F.col("shingles")).join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        )
-    else:
-        shingle_udf = make_shingle_udf(cfg)
-        pruned = sigs.select("url", "extracted").join(
-            maybe_broadcast(needed, cfg), "url", "left_semi"
-        )
-        sh = pruned.select(
-            "url", shingle_udf(F.col("extracted")).alias("shingles")
-        ).persist()
-        sh.count()  # both pair joins consume this — don't race the UDF
-        if registry is not None:
-            registry.append(sh)
+    pj = make_pair_jaccard_udf(cfg)
+    a = pruned.select(
+        F.col("url").alias("url_a"), F.col("extracted").alias("text_a")
+    )
+    b = pruned.select(
+        F.col("url").alias("url_b"), F.col("extracted").alias("text_b")
+    )
     j = (
-        candidates.join(sh.withColumnRenamed("url", "url_a").withColumnRenamed("shingles", "sh_a"), "url_a")
-        .join(sh.withColumnRenamed("url", "url_b").withColumnRenamed("shingles", "sh_b"), "url_b")
-        .withColumn(
-            "score",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
+        maybe_broadcast(candidates, cfg)
+        .join(a, "url_a")
+        .join(b, "url_b")
+        .withColumn("score", pj(F.col("text_a"), F.col("text_b")))
     )
     return (
         j.filter(F.col("score") >= F.lit(cfg.jaccard_threshold))
@@ -622,20 +528,24 @@ def incremental_minhash_pairs(
     cached signatures are never recomputed, verified pairs never re-verified,
     QdrantRepository.cs:158-182 + SimilarImageFinder.cs:303-315).
 
+    ``existing_sigs`` and the returned new_sigs are (url, extracted,
+    minhash): the state keeps the text, so verify is the batch rehash path.
     Returns (new_sigs, new_pairs): new_pairs touches at least one new doc —
     probes are ONLY the new docs' bands, joined against the full band index
     (old pairs among existing docs are already in the checkpoint). The
     index grows with the whole corpus, so its hot buckets are capped exactly
     like the batch path (bands.banded_pairs, incremental mode).
     """
-    # localCheckpoint: the shingle+minhash UDF subtree feeds four consumers
-    # (probe bands, the accumulated index union, the verify shingle join,
-    # and the caller's state write) — without a barrier it recomputes per
-    # consumer every micro-batch (the simhash/substring incremental paths
-    # already checkpoint theirs for exactly this reason; r6 closes the gap)
-    new_sigs = with_signatures(new_reps, cfg).localCheckpoint()
-    cols = ["url", "shingles", "minhash"]
-    all_sigs = existing_sigs.select(*cols).unionByName(new_sigs.select(*cols))
+    # localCheckpoint: the minhash UDF subtree feeds four consumers (probe
+    # bands, the accumulated index union, the verify text join, and the
+    # caller's state write) — without a barrier it recomputes per consumer
+    # every micro-batch (the simhash/substring incremental paths checkpoint
+    # theirs for the same reason)
+    cols = ["url", "extracted", "minhash"]
+    new_sigs = with_signatures(
+        new_reps.select("url", "extracted"), cfg
+    ).localCheckpoint()
+    all_sigs = existing_sigs.select(*cols).unionByName(new_sigs)
 
     def index(sigs):
         return band_table(sigs, cfg).withColumnRenamed("band_hash", "band_key")
@@ -674,55 +584,36 @@ def minhash_pairs(
 ) -> DataFrame:
     """Full near-dup path: representatives -> confirmed minhash pairs.
 
-    ``registry``: optional list collecting every DataFrame persisted here so
-    the caller can unpersist them when done (pipeline.run's release()).
-    With ``registry=None`` the intermediates are unpersisted on return and
-    the lazy result recomputes them per consumer."""
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _minhash_pairs(reps, cfg, sigs, registry)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _minhash_pairs(
-    reps: DataFrame,
-    cfg: DedupConfig,
-    sigs: DataFrame | None,
-    registry: list,
-) -> DataFrame:
+    ``registry=None``: nothing is cached and no job runs; the result is a
+    lazy plan. Pass a registry to cache the signatures, band table,
+    candidates and verify text across consumers: it collects every
+    DataFrame persisted here so the caller can unpersist them when done
+    (pipeline.run's release())."""
     if sigs is None:
-        # narrow minhash-only signatures (~1 KB/row): the band subtree
-        # references this several times — persist so the UDF runs once.
-        # LAZY: candidate_pairs' stats barrier is the first (and only
-        # concurrent-free) consumer, so one job materializes the reps
-        # cache, this signature cache, the repartitioned band table and
-        # the bucket stats back-to-back instead of three barrier jobs.
-        sigs = with_signatures(reps, cfg, include_shingles=False).persist()
+        sigs = with_signatures(reps, cfg)
         if registry is not None:
-            registry.append(sigs)
-    raw_cands = candidate_pairs(band_table(sigs, cfg), cfg, registry=registry)
-    if cfg.verify_est_margin is not None and "minhash" in sigs.columns:
+            # narrow minhash-only signatures (~1 KB/row): the band subtree
+            # references this several times — persist so the UDF runs once.
+            # LAZY: candidate_pairs' stats barrier is the first (and only
+            # concurrent-free) consumer, so one job materializes the reps
+            # cache, this signature cache, the repartitioned band table and
+            # the bucket stats back-to-back instead of three barrier jobs.
+            registry.append(sigs.persist())
+    cands = candidate_pairs(band_table(sigs, cfg), cfg, registry=registry)
+    if cfg.verify_est_margin is not None:
         # estimate-prune on the narrow signatures BEFORE anything wide moves
         # (see est_prefilter); raw candidates have exactly one consumer (the
         # estimate join), so they stay lazy — only the surviving set is
         # cached for verify's three consumers
-        raw_cands = est_prefilter(raw_cands, sigs, cfg)
-    # cands is consumed three times in verify (the url prune + both pair
-    # joins); it is small (LSH selectivity) — persist so the band self-join
-    # runs once. LAZY: verify's pruned-text barrier consumes the url prune
-    # first (no concurrent reference), filling this cache en route.
-    cands = raw_cands.persist()
+        cands = est_prefilter(cands, sigs, cfg)
     if registry is not None:
-        registry.append(cands)
-    # verify recomputes shingles for candidate urls only when sigs are
-    # narrow: reps carries the text
-    verify_source = sigs if "shingles" in sigs.columns else reps
-    confirmed = verify_pairs(cands, verify_source, cfg, registry=registry)
+        # cands is consumed three times in verify (the url prune + both pair
+        # joins); it is small (LSH selectivity) — persist so the band
+        # self-join runs once. LAZY: verify's pruned-text barrier consumes
+        # the url prune first (no concurrent reference), filling this cache
+        # en route.
+        registry.append(cands.persist())
+    confirmed = verify_pairs(cands, reps, cfg, registry=registry)
     if cfg.top_k_neighbors is not None:
         confirmed = top_k_per_probe(confirmed, cfg.top_k_neighbors)
     return confirmed

@@ -111,12 +111,6 @@ def run(
     checkpoint store.
     """
     spark = docs.sparkSession
-
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = _os.environ.get("EUROPA_STAGE_TIMING") == "1"
     persisted: list[DataFrame] = []
 
     def _persist(df: DataFrame) -> DataFrame:
@@ -155,7 +149,7 @@ def run(
         ckpt_ids.clear()
 
     def stage(name: str, compute):
-        _t0 = _time.time() if (tracker is None) else tracker.begin(name)
+        t0 = tracker.begin(name) if tracker is not None else None
         # tag every job this stage launches (thread-local): the Spark UI and
         # the event log then attribute shuffle/CPU metrics to the pipeline
         # stage by name (tools/stage_bytes.py reads them back)
@@ -172,10 +166,7 @@ def run(
         finally:
             spark.sparkContext.setJobDescription(None)
             if tracker is not None:
-                tracker.end(name, _t0)
-            if _timing:
-                print(f"STAGE {name}: {_time.time()-_t0:.2f}s",
-                      file=_sys.stderr, flush=True)
+                tracker.end(name, t0)
 
     filtered = apply_filters(docs, cfg)
     extracted = with_extracted(filtered)
@@ -196,7 +187,7 @@ def run(
     # (timing only — no checkpoint table) so the scaling profile attributes
     # the scan+extract+cache bytes to the right phase (near-zero now: the
     # fill bills to signatures_dual).
-    _t0 = tracker.begin("extract_clean") if tracker is not None else _time.time()
+    t0 = tracker.begin("extract_clean") if tracker is not None else None
     try:
         # content_hash is computed INTO the cache (sha2 is CPU, which
         # scales; a separate hashing pass would re-stream the 2.5 KB/row
@@ -222,10 +213,7 @@ def run(
         # lazy.
     finally:
         if tracker is not None:
-            tracker.end("extract_clean", _t0)
-        if _timing:
-            print(f"STAGE extract_clean: {_time.time()-_t0:.2f}s",
-                  file=_sys.stderr, flush=True)
+            tracker.end("extract_clean", t0)
     # quarantine stays lazy without a store: it is an output, not an input
     # of any later stage — eager materialization would bill a full extra
     # extract pass to every pipeline run that never reads it
@@ -338,9 +326,7 @@ def run(
                 "signatures",
                 lambda: _truncate(
                     with_signatures(
-                        spread_kernel_input(reps, filtered),
-                        cfg,
-                        include_shingles=False,
+                        spread_kernel_input(reps, filtered), cfg
                     ).select("url", "minhash")
                 ),
             )

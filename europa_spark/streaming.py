@@ -160,8 +160,10 @@ def read_dup_log(spark: SparkSession, state_dir: str) -> DataFrame:
 # Streaming NEAR-duplicate dedup: the MinHash/LSH path under foreachBatch.
 # Each micro-batch signatures its new docs once, probes the accumulated band
 # index (incremental_minhash_pairs: delta probes x full index, J4/J5 resume
-# semantics), and appends its signatures + confirmed pairs to per-batch
-# partitions with the same exactly-once replay scheme as the exact path.
+# semantics), and appends its (url, extracted, minhash) state + confirmed
+# pairs to per-batch partitions with the same exactly-once replay scheme as
+# the exact path. The state keeps the text, not shingle arrays: the exact
+# verify rehashes it like the batch path does.
 # ---------------------------------------------------------------------------
 
 
@@ -188,7 +190,11 @@ def process_batch_neardup(
 ) -> None:
     """One micro-batch of incremental MinHash/LSH dedup. Deterministic given
     (batch rows, state with batch_id < batch_id), so checkpoint-recovery
-    replays rewrite identical partitions."""
+    replays rewrite identical partitions.
+
+    Raises ValueError on a ``sigs/`` dir in the old (url, shingles, minhash)
+    layout: reading it as an empty index would re-pair history that
+    ``pairs/`` already holds."""
     from .config import CANONICAL
     from .exact import representatives, with_content_hash
     from .minhash import incremental_minhash_pairs
@@ -200,9 +206,18 @@ def process_batch_neardup(
         "url", "extracted"
     )
 
+    sigs_path = _sigs_path(state_dir)
+    if _state_path_exists(spark, sigs_path):
+        cols = spark.read.parquet(sigs_path).columns
+        if "shingles" in cols and "extracted" not in cols:
+            raise ValueError(
+                f"{sigs_path} holds near-dup state in the old (url, shingles, "
+                "minhash) layout; sigs/ is now (url, extracted, minhash). "
+                "Start a new state_dir: the old one cannot be resumed."
+            )
     existing_sigs = _read_state(
-        spark, _sigs_path(state_dir),
-        "url string, shingles array<bigint>, minhash array<bigint>", batch_id,
+        spark, sigs_path,
+        "url string, extracted string, minhash array<bigint>", batch_id,
     )
     existing_pairs = _read_state(
         spark, _pairs_path(state_dir),
@@ -211,8 +226,8 @@ def process_batch_neardup(
     new_sigs, new_pairs = incremental_minhash_pairs(
         existing_sigs, new_reps, cfg, existing_pairs=existing_pairs
     )
-    new_sigs.select("url", "shingles", "minhash").write.mode("overwrite").parquet(
-        os.path.join(_sigs_path(state_dir), f"batch_id={batch_id}")
+    new_sigs.write.mode("overwrite").parquet(
+        os.path.join(sigs_path, f"batch_id={batch_id}")
     )
     new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
         os.path.join(_pairs_path(state_dir), f"batch_id={batch_id}")

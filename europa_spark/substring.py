@@ -205,28 +205,11 @@ def substring_pairs(
     once for minhash AND winnowing (minhash.with_dual_signatures); it must
     already be materialized.
 
-    ``registry=None``: intermediates unpersist on return (recompute per
-    consumer); pass a registry to cache across consumers (see
+    ``registry=None``: nothing is cached and no job runs; the result is a
+    lazy plan. Pass a registry to cache the fingerprint relations behind
+    one barrier job and unpersist them when done (see
     minhash.minhash_pairs).
     """
-    own = registry is None
-    if own:
-        registry = []
-    try:
-        return _substring_pairs(reps, cfg, max_df, registry, fp_arrays)
-    finally:
-        if own:
-            for f in registry:
-                f.unpersist()
-
-
-def _substring_pairs(
-    reps: DataFrame,
-    cfg: DedupConfig,
-    max_df: int,
-    registry: list,
-    fp_arrays: DataFrame | None,
-) -> DataFrame:
     if fp_arrays is None:
         # the winnow kernel is the expensive part and this DAG consumes the
         # fingerprint relation three times (df-count branch + both self-join
@@ -235,9 +218,9 @@ def _substring_pairs(
         # fingerprints table. LAZY: the rare barrier below is the first
         # consumer and fills this cache en route (no racing stage touches
         # it earlier), so the UDF still runs exactly once.
-        fp_arrays = with_fingerprints(reps, cfg).persist()
+        fp_arrays = with_fingerprints(reps, cfg)
         if registry is not None:
-            registry.append(fp_arrays)
+            registry.append(fp_arrays.persist())
     else:
         fp_arrays = fp_arrays.select("uid", "url", "fps")
     id_map = fp_arrays.select("uid", "url")
@@ -255,13 +238,9 @@ def _substring_pairs(
     # the df-cap groupBy, the rare join, and the self-join are all
     # exchange-free (HashPartitioning(fp) satisfies every downstream
     # distribution; AQE leaves cached-plan partitioning intact by default).
-    fps = (
-        fp_arrays.select("uid", F.explode("fps").alias("fp"))
-        .repartition("fp")
-        .persist()
-    )
+    fps = fp_arrays.select("uid", F.explode("fps").alias("fp")).repartition("fp")
     if registry is not None:
-        registry.append(fps)
+        registry.append(fps.persist())
     # stop-fingerprint cap: a fingerprint shared by thousands of docs is
     # boilerplate, not evidence of a copied passage. Aggregation runs
     # in-place on the fp-partitioned cache (no exchange).
@@ -278,10 +257,10 @@ def _substring_pairs(
         .count()
         .filter((F.col("count") > 1) & (F.col("count") <= max_df))
         .select("fp")
-    ).persist()
-    rare.count()
+    )
     if registry is not None:
-        registry.append(rare)
+        registry.append(rare.persist())
+        rare.count()
     # SHUFFLE_HASH on the RARE side only: a sort-merge plan here SORTS the
     # full exploded relation, and those sort buffers shrink linearly with
     # core count — measured 0 MB spilled at 8 cores vs 9,067 MB at 32 in

@@ -61,7 +61,7 @@ def test_incremental_hot_bucket_salted_probe(spark):
     assert ("u00", "u08") in got  # star anchor edge
     # replicate the salt assignment over the accumulated band index:
     # 9 identical docs per bucket, cap 2 -> n_salts = ceil(9/2) = 5
-    cols = ["url", "shingles", "minhash"]
+    cols = ["url", "extracted", "minhash"]
     bt = band_table(
         old_sigs.select(*cols).unionByName(new_sigs.select(*cols)), cfg
     )

@@ -11,6 +11,7 @@ from europa_spark.exact import representatives, with_content_hash
 from europa_spark.extract import split_quarantine, with_extracted
 from europa_spark.fixtures import _shingles, jaccard
 from europa_spark.minhash import (
+    _batch_shingle_hashes,
     band_table,
     candidate_pairs,
     minhash_pairs,
@@ -33,11 +34,19 @@ def sigs(reps):
 
 
 def test_signature_shape_and_determinism(spark, sigs):
-    two = sigs.limit(5).select("url", "minhash", "shingles")
+    two = sigs.limit(5).select("url", "minhash")
     rows1 = {r["url"]: r["minhash"] for r in two.collect()}
     rows2 = {r["url"]: r["minhash"] for r in two.collect()}
     assert rows1 == rows2
     assert all(len(v) == 128 for v in rows1.values())
+
+
+def test_signatures_carry_no_shingle_arrays(reps, sigs):
+    """Signatures add only the minhash column; the wide shingle-array
+    layout is gone (verify rehashes the text)."""
+    assert sigs.columns == [*reps.columns, "minhash"]
+    with pytest.raises(ValueError):
+        with_signatures(reps, include_shingles=True)
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -162,23 +171,37 @@ def test_band_join_is_narrow(spark, sigs):
         assert "shingles" not in line and "minhash" not in line, line
 
 
-def test_verify_strategy_and_margin_equivalence(spark, reps):
-    """r4 ADVICE #2: the three verify configurations must confirm the
-    IDENTICAL (url_a, url_b, score) set on the planted corpus —
-    'rehash' (default), 'arrays' (the pre-r4 default path), and the
-    est_prefilter margin (which must drop nothing at the canonical
-    config: P(false drop) ~ 1e-5 per true pair)."""
+def test_verify_strategy_and_margin_equivalence(spark, reps, sigs):
+    """The rehash verify must score every confirmed pair exactly as a
+    driver-side |A∩B|/|A∪B| over Python sets of the same shingle hashes,
+    and confirm every verified candidate that reference puts at or above
+    the threshold; the est_prefilter margin must drop nothing at the
+    canonical config (P(false drop) ~ 1e-5 per true pair)."""
     base = {
         (r["url_a"], r["url_b"], r["score"])
         for r in minhash_pairs(reps).collect()
     }
     assert base, "planted corpus must yield pairs"
-    arrays_cfg = DedupConfig(verify_strategy="arrays")
-    got_arrays = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in minhash_pairs(reps, arrays_cfg).collect()
-    }
-    assert got_arrays == base
+    cfg = DedupConfig()
+    cands = [
+        (r["url_a"], r["url_b"])
+        for r in candidate_pairs(band_table(sigs)).collect()
+    ]
+    ext = {r["url"]: r["extracted"] for r in reps.collect()}
+    urls = sorted({u for p in cands for u in p})
+    sets = dict(zip(urls, (
+        set(a.tolist())
+        for a in _batch_shingle_hashes([ext[u] for u in urls], cfg.shingle_k)
+    )))
+
+    def ref(a, b):
+        return len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+
+    for a, b, score in base:
+        assert score == ref(a, b), (a, b, score, ref(a, b))
+    expected = {(a, b) for a, b in cands if ref(a, b) >= cfg.jaccard_threshold}
+    missing = expected - {(a, b) for a, b, _ in base}
+    assert not missing, sorted(missing)[:5]
     margin_cfg = DedupConfig(verify_est_margin=0.15)
     got_margin = {
         (r["url_a"], r["url_b"], r["score"])
@@ -222,3 +245,24 @@ def test_mega_bucket_star_only(spark):
     got = media_blockmean_pairs(bm, cfg=cfg).collect()
     assert {(r["url_a"], r["url_b"]) for r in got} == star
     assert all(r["score"] == 1.0 for r in got)
+
+
+def test_pair_functions_without_registry_are_lazy(spark, reps):
+    """With no registry, building the minhash and substring pair plans
+    launches no Spark job and caches nothing: a barrier job whose caches
+    are dropped before the lazy result is read is pure waste."""
+    from europa_spark.cancel import JobGroup
+    from europa_spark.substring import substring_pairs
+
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    group = JobGroup(spark, "lazy-pair-plans")
+    with group:
+        minhash_pairs(reps)
+        substring_pairs(reps)
+    assert list(sc.statusTracker().getJobIdsForGroup(group.group_id)) == []
+    assert persisted() == before

@@ -264,6 +264,24 @@ def test_incremental_stream_neardup(spark, tmp_path):
     assert p3 == p2
 
 
+def test_neardup_rejects_old_state_layout(spark, tmp_path):
+    """A sigs/ dir written in the old (url, shingles, minhash) layout must
+    fail with an error that names the layout change, never read as an empty
+    index while pairs/ holds history."""
+    state = str(tmp_path / "oldstate")
+    spark.createDataFrame(
+        [("n1", [1, 2, 3], list(range(128)))],
+        "url string, shingles array<bigint>, minhash array<bigint>",
+    ).write.parquet(os.path.join(state, "sigs", "batch_id=0"))
+    base, _, _ = _near_dup_texts()
+    batch = spark.createDataFrame(
+        [("n2", None, None, base, "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    with pytest.raises(ValueError, match="old .*shingles.* layout"):
+        process_batch_neardup(batch, 1, state)
+
+
 def test_media_metadata_and_signatures(spark):
     rows = [
         ("m1", make_fake_media(8, 6, b"abcabc")),
