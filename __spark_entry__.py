@@ -144,10 +144,28 @@ def _shingle_col(text, k: int):
     ).otherwise(F.array(F.concat_ws("\x01", toks)))
 
 
+# Largest input (documents before cleaning) the brute-force pair queries
+# accept: 20k docs is 4e8 cross-join rows, 16x sf0.1's (5,000 docs). Past
+# it the n^2 join cannot finish in a bench or test budget;
+# minhash_lsh_pairs is the scalable form of the same answer.
+_QUADRATIC_MAX_DOCS = 20_000
+
+
+def _clean_for_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    n = load_canonical(spark, sf_dir).count()
+    if n > _QUADRATIC_MAX_DOCS:
+        raise ValueError(
+            f"{sf_dir} holds {n} documents; the brute-force pair queries "
+            f"cross-join every clean document and accept at most "
+            f"{_QUADRATIC_MAX_DOCS}"
+        )
+    return _clean(spark, sf_dir)
+
+
 def _q_shingle_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact word-5-gram Jaccard pairs >= threshold — the J3
     verifier as a standalone relational operator (engine-neutral)."""
-    d = _clean(spark, sf_dir).select(
+    d = _clean_for_cross_join(spark, sf_dir).select(
         "url", _shingle_col(F.col("extracted"), SHINGLE_K).alias("sh")
     )
     a = d.select(F.col("url").alias("url_a"), F.col("sh").alias("sh_a"))
@@ -168,7 +186,7 @@ def _q_shingle_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_unigram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set Jaccard >= 0.5 pairs (unigram variant, non-trivial on the
     sandbox corpus's small vocabulary)."""
-    d = _clean(spark, sf_dir).select(
+    d = _clean_for_cross_join(spark, sf_dir).select(
         "url", F.array_distinct(F.split("extracted", " ", -1)).alias("t")
     )
     a = d.select(F.col("url").alias("url_a"), F.col("t").alias("t_a"))
@@ -222,14 +240,12 @@ def _reps_for_kernels(clean: DataFrame, reg: list) -> DataFrame:
     so the scan+hash+winner subtree runs once and every downstream
     reference plans against a leaf.
 
-    Deliberately NOT spread across cores (pipeline.spread_kernel_input):
-    interleaved A/B at sf0.1 measured the spread HURTING every standalone
-    pair query (minhash 3.42 vs 2.59 s, simhash 2.29 vs 1.91, substring
-    1.51 vs 1.11) — their kernels are lighter than the pipeline's fused
-    dual pass, and the 32-task checkpoint ripples per-task overhead into
-    every downstream verify/band stage — while the same A/B showed it
-    HELPING the pipeline's dual-signature job (dedup_report 4.62 vs
-    5.05 s), where it is applied."""
+    The kernels run on the reps' own partitions (one per scan split), the
+    same as pipeline.run's signature stage: a round-robin out to every core
+    measured slower on each standalone pair query at sf0.1 on 32 cores
+    (minhash 3.42 vs 2.59 s, simhash 2.29 vs 1.91, substring 1.51 vs
+    1.11), since each extra task forks and warms its own Python worker and
+    ripples per-task overhead into every downstream verify/band stage."""
     return _truncated(
         representatives(with_content_hash(clean)).select("url", "extracted"),
         reg,

@@ -51,31 +51,6 @@ def load_documents(spark: SparkSession, source: str) -> DataFrame:
     return load_table(spark, source)
 
 
-def spread_kernel_input(
-    df: DataFrame, scan_probe: DataFrame, factor: int = 4
-) -> DataFrame:
-    """Scale-adaptive parallelism for the signature kernels (guide §2:
-    derive partitioning from the input, not a constant): a tiny corpus —
-    e.g. a single-row-group parquet file — yields ONE scan task, so the
-    pandas-UDF kernels run serially on one core no matter the core count.
-    When the SCAN has fewer than cores/``factor`` splits, round-robin the
-    (already collapsed, narrow) kernel input across the default parallelism
-    — ~12 MB shuffled at sf0.1, measured 0.95 -> 0.68 s warm / 5.4 -> 1.7 s
-    cold on the dual-signature job; any production-scale scan has orders of
-    magnitude more splits than cores and this is a no-op.
-
-    The partition probe runs on ``scan_probe`` (the exchange-free scan
-    frame), NOT on ``df``: calling .rdd on a plan containing exchanges
-    executes those query stages under AQE, which would launch jobs as a
-    side effect. Narrow ops and broadcast joins preserve the stream side's
-    partitioning, so the scan's split count IS df's partition count."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if scan_probe.rdd.getNumPartitions() * factor <= target:
-        return df.repartition(target)
-    return df
-
-
 def apply_filters(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Declarative scan predicates (FileFilter.cs:7-28 analog) — expressed
     as filters so Catalyst pushes them into the parquet/Iceberg scan."""
@@ -124,9 +99,10 @@ def run(
 
     ckpt_ids: set = set()
 
-    def _truncate(df: DataFrame) -> DataFrame:
+    def _truncate(df: DataFrame) -> tuple[DataFrame, int]:
         # EAGER materialization that ALSO cuts lineage (localCheckpoint):
-        # one barrier job, after which downstream actions
+        # one barrier job (a count, whose row total is returned alongside
+        # the frame), after which downstream actions
         # plan against a leaf LogicalRDD instead of the full composed tree.
         # The deep frames here (signatures -> bands -> candidates -> verify
         # -> union) nest the whole upstream plan MULTIPLICATIVELY (each
@@ -137,9 +113,9 @@ def run(
         # after truncation: 0.11 s). The union-find loop alone paid it 2-3
         # times per run (r5's "components ~5.7 s driver floor" was mostly
         # this). Blocks are tracked and freed by release() like persists.
-        out, ids = _tracked_local_checkpoint(df)
+        out, ids = _tracked_local_checkpoint(df, eager=False)
         ckpt_ids.update(ids)
-        return out
+        return out, out.count()
 
     def release() -> None:
         for df in persisted:
@@ -260,11 +236,7 @@ def run(
             # needs winnow fps would fail downstream (r3 ADVICE #2).
             dual = stage(
                 "signatures_dual",
-                lambda: _truncate(
-                    with_dual_signatures(
-                        spread_kernel_input(reps, filtered), cfg
-                    )
-                ),
+                lambda: _truncate(with_dual_signatures(reps, cfg))[0],
             )
             sigs = dual.select("url", "minhash")
             # the minhash chain (band stats + candidate/verify barriers) and
@@ -325,10 +297,8 @@ def run(
             sigs = stage(
                 "signatures",
                 lambda: _truncate(
-                    with_signatures(
-                        spread_kernel_input(reps, filtered), cfg
-                    ).select("url", "minhash")
-                ),
+                    with_signatures(reps, cfg).select("url", "minhash")
+                )[0],
             )
             pair_frames.append(
                 stage(
@@ -354,20 +324,25 @@ def run(
     # pairs is consumed by union-find AND returned as an output — eager, so
     # the heavy verify/vote join subtrees run exactly once (and the
     # components stage timer measures only the clustering loop)
-    pairs = stage(
-        "pairs",
-        lambda: _truncate(
+    n_pairs: list[int] = []
+
+    def _pairs() -> DataFrame:
+        out, n = _truncate(
             reduce(DataFrame.unionByName, pair_frames)
             .dropDuplicates(["url_a", "url_b"])
-        ),
-    )
+        )
+        n_pairs.append(n)
+        return out
+
+    pairs = stage("pairs", _pairs)
 
     def _components() -> DataFrame:
-        # pairs is already materialized, so its count is a cached-metadata
-        # job; the hint lets union-find build its right-sized adjacency in
-        # one pass. The result's checkpoint is freed by release().
+        # the hint lets union-find build its right-sized adjacency in one
+        # pass; it is the pairs checkpoint's own materializing count, so
+        # only a stage resumed from the store (which skipped _pairs) counts
+        # again. The result's checkpoint is freed by release().
         out, ids = tracked_connected_components(
-            pairs, n_edges_hint=pairs.count()
+            pairs, n_edges_hint=n_pairs[0] if n_pairs else pairs.count()
         )
         ckpt_ids.update(ids)
         return out

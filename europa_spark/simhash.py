@@ -75,6 +75,10 @@ def _simhash_np(text: str, cache: dict, token_hash=_token_hash) -> int:
 
 
 _CHUNK_TOKENS = 64_000  # ~512 KB uint64 working buffers — cache-resident
+# rows per chunk: _segment_bit_counts bins are rows x 256 int64 per byte
+# lane (~1 MB at 512 rows). The token cap alone lets a run of empty or
+# one-token docs grow a chunk to the whole Arrow batch.
+_CHUNK_ROWS = 512
 
 # (256, 8) LUT: _BYTE_BITS[v, b] = bit b of byte value v
 _BYTE_BITS = ((np.arange(256)[:, None] >> np.arange(8)[None, :]) & 1).astype(
@@ -117,7 +121,7 @@ def _batch_simhash(texts: list[str], token_hash=_token_hash) -> np.ndarray:
     i = 0
     while i < n_rows:
         j, toks = i, 0
-        while j < n_rows and (
+        while j < n_rows and j - i < _CHUNK_ROWS and (
             toks == 0 or toks + int(lens_all[j]) <= _CHUNK_TOKENS
         ):
             toks += int(lens_all[j])

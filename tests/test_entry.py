@@ -31,3 +31,12 @@ def test_each_query_runs(spark, name):
     df = fn(spark, SF)
     assert df.columns, name
     assert df.count() >= 0
+
+
+@pytest.mark.parametrize("name", ["shingle_jaccard_pairs", "unigram_jaccard_pairs"])
+def test_cross_join_queries_refuse_large_inputs(spark, monkeypatch, name):
+    """The brute-force pair queries raise, naming their bound, instead of
+    starting an n^2 join over an input above it (sf0.001 holds 500 docs)."""
+    monkeypatch.setattr(entrymod, "_QUADRATIC_MAX_DOCS", 499)
+    with pytest.raises(ValueError, match="accept at most 499"):
+        entrymod.queries()[name](spark, SF)

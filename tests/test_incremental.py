@@ -22,14 +22,27 @@ def split_reps(spark, docs_df):
 
 def test_incremental_equals_batch(spark, split_reps):
     reps, old, new = split_reps
-    batch_pairs = {
-        (r["url_a"], r["url_b"]) for r in minhash_pairs(reps).collect()
-    }
-    old_sigs = with_signatures(old)
-    old_pairs = minhash_pairs(old, sigs=old_sigs)
-    old_set = {(r["url_a"], r["url_b"]) for r in old_pairs.collect()}
-    _, delta = incremental_minhash_pairs(old_sigs, new, existing_pairs=old_pairs)
-    delta_set = {(r["url_a"], r["url_b"]) for r in delta.collect()}
+    # caller-owned caches: every frame read more than once (the signatures,
+    # old_pairs, and the band/verify intermediates behind the registry)
+    # runs its UDF subtree once
+    reg: list = []
+    try:
+        batch_pairs = {
+            (r["url_a"], r["url_b"])
+            for r in minhash_pairs(reps, registry=reg).collect()
+        }
+        old_sigs = with_signatures(old).persist()
+        reg.append(old_sigs)
+        old_pairs = minhash_pairs(old, sigs=old_sigs, registry=reg).persist()
+        reg.append(old_pairs)
+        old_set = {(r["url_a"], r["url_b"]) for r in old_pairs.collect()}
+        _, delta = incremental_minhash_pairs(
+            old_sigs, new, existing_pairs=old_pairs
+        )
+        delta_set = {(r["url_a"], r["url_b"]) for r in delta.collect()}
+    finally:
+        for f in reg:
+            f.unpersist()
     # no overlap (anti-join) and exact union
     assert not (old_set & delta_set)
     assert old_set | delta_set == batch_pairs

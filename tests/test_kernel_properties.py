@@ -86,6 +86,39 @@ def test_batch_simhash_equal_per_row(texts, use_fnv, tiny_chunks):
         assert got == sh._simhash_np(t, cache, token_hash), t
 
 
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(st.one_of(st.just(""), _word), min_size=1, max_size=40),
+    st.booleans(),
+    st.integers(1, 4),
+)
+def test_batch_simhash_row_capped_chunks(texts, use_fnv, chunk_rows):
+    """Empty and one-token docs: the row cap, not the token cap, closes
+    each chunk, so the bit-count bins stay chunk_rows x 256 however many
+    such docs a batch holds; the signatures stay bit-identical."""
+    import europa_spark.simhash as sh
+
+    token_hash = sh._fnv1a64 if use_fnv else sh._token_hash
+    seen: list[int] = []
+    counts = sh._segment_bit_counts
+
+    def spy(vals, seg256, n_rows):
+        seen.append(n_rows)
+        return counts(vals, seg256, n_rows)
+
+    old = sh._CHUNK_TOKENS, sh._CHUNK_ROWS, sh._segment_bit_counts
+    try:
+        sh._CHUNK_TOKENS, sh._CHUNK_ROWS = 64, chunk_rows
+        sh._segment_bit_counts = spy
+        batch = sh._batch_simhash(texts, token_hash)
+    finally:
+        sh._CHUNK_TOKENS, sh._CHUNK_ROWS, sh._segment_bit_counts = old
+    assert max(seen) <= chunk_rows
+    cache: dict = {}
+    for t, got in zip(texts, batch):
+        assert got == sh._simhash_np(t, cache, token_hash), t
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.text(alphabet="abc ", min_size=200, max_size=400), st.integers(0, 150))
 def test_winnow_guarantee(doc, offset):
