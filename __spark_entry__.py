@@ -29,7 +29,7 @@ from europa_spark.ann import (
 from europa_spark.config import CANONICAL
 from europa_spark.exact import exact_membership, exact_clusters, representatives, with_content_hash
 from europa_spark.extract import split_quarantine, with_extracted
-from europa_spark.minhash import minhash_pairs
+from europa_spark.minhash import minhash_pairs, with_signatures
 from europa_spark.pipeline import run
 from europa_spark.quality import (
     doc_fingerprints,
@@ -39,7 +39,7 @@ from europa_spark.quality import (
     quality_features,
     quality_features_sql,
 )
-from europa_spark.simhash import simhash_pairs, with_simhash
+from europa_spark.simhash import simhash_pairs
 from europa_spark.substring import WINNOW_MAX_DF, substring_pairs
 
 # DuckDB view `documents` has the driver schema (doc_id, text, lang, source,
@@ -428,7 +428,7 @@ def _q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     blake2b default stays pinned by tests/test_simhash.py)."""
     clean = _assert_ascii(_clean(spark, sf_dir))
     reps = representatives(with_content_hash(clean)).select("url", "extracted")
-    return with_simhash(reps, SIMHASH_FNV).select(
+    return with_signatures(reps, SIMHASH_FNV, kinds=("simhash",)).select(
         "url", F.lpad(F.hex("simhash"), 16, "0").alias("simhash_hex")
     )
 
@@ -535,11 +535,13 @@ def _q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (min/least over the id column), so cluster_id is the NUMERIC min —
     # matching the SQL twin's BIGINT min (string ids would label by
     # lexicographic min and diverge)
+    # materialized first: with no edge-count hint, union-find counts the
+    # edges before it builds its adjacency — two reads of a lazy pair plan
     pairs = embedding_dup_pairs_lsh(
         load_embeddings(spark, sf_dir), threshold=EMB_DUP_THRESHOLD
     ).select(
         F.col("vec_id_a").alias("url_a"), F.col("vec_id_b").alias("url_b")
-    )
+    ).localCheckpoint()
     comp = connected_components(pairs)
     return comp.select(
         F.col("url").alias("vec_id"), F.col("cluster_id").alias("cluster_id")

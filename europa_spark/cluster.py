@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    checkpoint_every: int = 1,
     n_edges_hint: int | None = None,
 ) -> DataFrame:
     """pairs(url_a, url_b, ...) -> (url, cluster_id = min url of component).
@@ -35,9 +34,11 @@ def connected_components(
     Only nodes appearing in >= 1 edge are emitted (singletons are not
     clusters; SimilarImageFinder.cs:119 keeps groups of >= 2 only).
 
-    ``n_edges_hint``: undirected edge count if the caller already knows it
-    (e.g. from a materialized pair table) — skips one count job and lets the
-    adjacency be built with its loop partitioning in a single pass.
+    ``n_edges_hint``: distinct undirected edge count, which sizes the
+    adjacency's loop partitioning. Pass it if the caller already knows it
+    (e.g. from a materialized pair table); without it one count job over
+    ``pairs`` measures it, so an expensive lazy ``pairs`` plan is best
+    cached first.
 
     The result is backed by the final round's local checkpoint, whose
     blocks Spark's ContextCleaner reclaims once the frame is garbage
@@ -93,24 +94,13 @@ def tracked_connected_components(
     # action that materializes them — a star-forest graph (webtext: exact
     # groups + hot-bucket star routing emit anchor->member edges whose init
     # labels are already final) converges in a single job instead of 3-5.
-    if n_edges_hint is not None:
-        # non-eager: round 0's convergence count materializes the
-        # repartition while it truncates the lineage
-        adj, adj_ids = _tracked_local_checkpoint(
-            adj.repartition(_loop_parts(2 * n_edges_hint), "url_b"),
-            eager=False,
-        )
-    else:
-        adj, adj_ids = _tracked_local_checkpoint(adj)
-        n_adj = adj.count()  # cheap: materialized by the checkpoint above
-        loop_parts = _loop_parts(n_adj)
-        if adj.rdd.getNumPartitions() != loop_parts:
-            repart, new_ids = _tracked_local_checkpoint(
-                adj.repartition(loop_parts, "url_b")
-            )
-            repart.count()
-            _unpersist_ids(pairs.sparkSession, adj_ids)
-            adj, adj_ids = repart, new_ids
+    if n_edges_hint is None:
+        n_edges_hint = edges.count()
+    # non-eager: round 0's convergence count materializes the repartition
+    # while it truncates the lineage
+    adj, adj_ids = _tracked_local_checkpoint(
+        adj.repartition(_loop_parts(2 * n_edges_hint), "url_b"), eager=False
+    )
     try:
         return _cc_loop(adj, max_iter)
     finally:

@@ -31,7 +31,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
@@ -224,91 +223,75 @@ def _minhash_of(
     return out
 
 
-def make_minhash_only_udf(cfg: DedupConfig = CANONICAL):
-    """Signature UDF that emits ONLY the num_perm-long MinHash array (~1 KB
-    per row) and keeps the full shingle-hash arrays (~3-4 KB per row on
-    webtext) inside the Python worker. The wide arrays were the measured
-    32-core anti-scaling culprit (r02 profile: the emit-everything stage ran
-    3x SLOWER at 32 workers than at 8 — Arrow serialization + columnar cache
-    of ~4 KB/row saturates DRAM bandwidth long before 32 cores are CPU
-    bound). Verify recomputes shingles for the few candidate docs instead
-    (see verify_pairs)."""
-    from pyspark.sql.functions import pandas_udf
-
-    k = cfg.shingle_k
-    a, b = _perm_params(cfg)
-    num_perm = cfg.num_perm
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_only(text: pd.Series) -> pd.Series:
-        arrs = _batch_shingle_hashes([t if t is not None else "" for t in text], k)
-        return pd.Series(_minhash_of(arrs, a, b, num_perm), dtype=object)
-
-    return minhash_only
-
-
-def make_dual_signature_udf(cfg: DedupConfig = CANONICAL):
-    """MinHash signature + winnowing fingerprints in ONE pandas UDF — a
-    single Arrow transfer of the text instead of two full passes (the
-    r2-measured scaling bottleneck is bytes moved, not CPU: the text column
-    dominates every stream, so the minhash and substring passes sharing one
-    JVM->Python crossing halves the pipeline's largest byte flow). Output
-    stays narrow: 128-long minhash (~1 KB) + winnow fingerprints (~320 B at
-    w=128 on ~2.5 KB docs); shingle arrays never leave the worker."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .substring import _batch_winnow
-
-    k = cfg.shingle_k
-    a, b = _perm_params(cfg)
-    num_perm = cfg.num_perm
-    kw, w = cfg.winnow_kgram, cfg.winnow_window
-
-    @pandas_udf("minhash array<bigint>, fps array<bigint>")
-    def dual_signature(text: pd.Series) -> pd.DataFrame:
-        ts = [t if t is not None else "" for t in text]
-        arrs = _batch_shingle_hashes(ts, k)
-        mins = _minhash_of(arrs, a, b, num_perm)
-        fps = _batch_winnow(ts, kw, w)
-        return pd.DataFrame(
-            {
-                "minhash": pd.Series(mins, dtype=object),
-                "fps": pd.Series([f.view(np.int64) for f in fps], dtype=object),
-            }
-        )
-
-    return dual_signature
-
-
-def with_dual_signatures(reps: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
-    """reps(url, extracted) -> (uid, url, minhash, fps): the one-pass
-    signature table feeding BOTH the LSH band join and the substring
-    fingerprint join (uid = the substring pass's compact 8-byte key)."""
-    dual = make_dual_signature_udf(cfg)
-    return reps.select(
-        F.xxhash64("url").alias("uid"),
-        "url",
-        dual(F.col("extracted")).alias("s"),
-    ).select("uid", "url", F.col("s.minhash").alias("minhash"), F.col("s.fps").alias("fps"))
+SIGNATURE_KINDS = {
+    "minhash": "array<bigint>",  # MinHash over word k-shingles (band join)
+    "fps": "array<bigint>",  # winnowing fingerprints (substring.py)
+    "simhash": "bigint",  # SimHash-64 (simhash.py)
+}
 
 
 def with_signatures(
     reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
+    *,
+    kinds: tuple[str, ...] = ("minhash",),
     include_shingles: bool = False,
 ) -> DataFrame:
-    """reps(url, extracted, ...) -> + minhash ARRAY<BIGINT>. The shingle-hash
-    arrays stay in the Python worker: narrow signatures scale with cores,
-    wide ones are DRAM-bound (see make_minhash_only_udf), and the exact
-    verify recomputes shingles from the text (verify_pairs).
-    ``include_shingles`` must be False: no caller needs the arrays."""
+    """reps(url, extracted, ...) -> reps' columns + one column per kind in
+    ``kinds`` (SIGNATURE_KINDS), all from ONE pandas UDF: each Arrow batch
+    of text crosses the JVM->Python boundary once and leaves as a struct of
+    exactly ``kinds``. The text column dominates every stream and bytes
+    moved are the measured scaling ceiling (r2), so the minhash, substring
+    and simhash passes share one crossing instead of paying one each.
+
+    Output stays narrow: 128-long minhash (~1 KB), winnow fingerprints
+    (~320 B at w=128 on ~2.5 KB docs), one 64-bit simhash. The shingle-hash
+    arrays (~3-4 KB per row on webtext) never leave the worker — emitting
+    and caching them was the measured 32-core anti-scaler (r02: 3x SLOWER
+    at 32 workers than at 8, DRAM-bound) — so ``include_shingles`` must be
+    False; verify_pairs rehashes the text of the few candidate docs."""
+    from pyspark.sql.functions import pandas_udf
+
+    # imported here: simhash imports this module
+    from .simhash import _TOKEN_HASHES, _batch_simhash
+    from .substring import _batch_winnow
+
     if include_shingles:
         raise ValueError(
             "with_signatures emits no shingle arrays; verify_pairs rehashes "
             "the extracted text"
         )
-    mh = make_minhash_only_udf(cfg)
-    return reps.withColumn("minhash", mh(F.col("extracted")))
+    kinds = tuple(kinds)
+    if not kinds or not set(kinds) <= set(SIGNATURE_KINDS):
+        raise ValueError(
+            f"signature kinds must be a non-empty subset of "
+            f"{sorted(SIGNATURE_KINDS)}, got {kinds!r}"
+        )
+    k = cfg.shingle_k
+    a, b = _perm_params(cfg)
+    num_perm = cfg.num_perm
+    kw, w = cfg.winnow_kgram, cfg.winnow_window
+    token_hash = _TOKEN_HASHES[cfg.simhash_token_hash]
+
+    @pandas_udf(", ".join(f"{kd} {SIGNATURE_KINDS[kd]}" for kd in kinds))
+    def signatures(text: pd.Series) -> pd.DataFrame:
+        ts = [t if t is not None else "" for t in text]
+        out = {}
+        for kd in kinds:
+            if kd == "minhash":
+                mins = _minhash_of(_batch_shingle_hashes(ts, k), a, b, num_perm)
+                out[kd] = pd.Series(mins, dtype=object)
+            elif kd == "fps":
+                # ndarray values: Arrow's fast path, no per-element boxing
+                fps = _batch_winnow(ts, kw, w)
+                out[kd] = pd.Series([f.view(np.int64) for f in fps], dtype=object)
+            else:
+                out[kd] = pd.Series(_batch_simhash(ts, token_hash))
+        return pd.DataFrame(out)
+
+    return reps.select("*", signatures(F.col("extracted")).alias("_sig")).select(
+        *reps.columns, *[F.col(f"_sig.{kd}").alias(kd) for kd in kinds]
+    )
 
 
 def band_table(sigs: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:

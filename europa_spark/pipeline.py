@@ -4,7 +4,7 @@
 Flow (SURVEY.md §3 Spark trace):
   scan -> lang/size filters -> extract -> quarantine split
        -> exact collapse (hash once per unique content)
-       -> signature stages on representatives only
+       -> one signature stage on representatives only
        -> confirmed pairs (exact star edges ∪ minhash ∪ substring [∪ simhash])
        -> union-find -> clusters / per-doc report
 
@@ -31,17 +31,18 @@ from .cluster import (
 from .config import DedupConfig, CANONICAL
 from .exact import content_hash_col, exact_pairs, exact_membership
 from .extract import split_quarantine, with_extracted
-from .minhash import (
-    maybe_broadcast,
-    minhash_pairs,
-    with_dual_signatures,
-    with_signatures,
-)
+from .minhash import maybe_broadcast, minhash_pairs, with_signatures
 from .progress import ProgressTracker
 from .simhash import simhash_pairs
 from .substring import substring_pairs
 
 DEFAULT_METHODS = ("exact", "minhash", "substring")
+# text method -> the signature kind it pairs on (minhash.SIGNATURE_KINDS),
+# in pair-union order
+_SIGNATURE_KIND = (
+    ("minhash", "minhash"), ("substring", "fps"), ("simhash", "simhash"),
+)
+METHODS = ("exact", *(m for m, _ in _SIGNATURE_KIND))
 
 
 def load_documents(spark: SparkSession, source: str) -> DataFrame:
@@ -81,10 +82,17 @@ def run(
     consuming the outputs; a long-lived session otherwise accumulates
     storage blocks across runs).
 
+    ``methods``: any subset of METHODS. A ``store`` keys each stage by
+    the method set as well as by name and config hash, so a store filled
+    under one set never resumes into another.
+
     ``tracker`` (europa_spark.progress.ProgressTracker) receives live
     begin/end events per stage — the S5 progress stream — with or without a
     checkpoint store.
     """
+    unknown = set(methods) - set(METHODS)
+    if unknown:
+        raise ValueError(f"unknown methods {sorted(unknown)}; known: {METHODS}")
     spark = docs.sparkSession
     persisted: list[DataFrame] = []
 
@@ -124,6 +132,8 @@ def run(
         _unpersist_ids(spark, ckpt_ids)
         ckpt_ids.clear()
 
+    method_key = "+".join(sorted(set(methods)))  # no glob chars: a path
+
     def stage(name: str, compute):
         t0 = tracker.begin(name) if tracker is not None else None
         # tag every job this stage launches (thread-local): the Spark UI and
@@ -136,8 +146,10 @@ def run(
                 # multi-consumer frames are persisted by the caller below.
                 return compute()
             # store-backed: the parquet write materializes the stage once
-            # and a resumed run reads it back (J5 cache-hit semantics)
-            df, _ = store.get_or_compute(spark, name, compute)
+            # and a resumed run reads it back (J5 cache-hit semantics). The
+            # key names the method set: a stage stored under one set (say
+            # pairs without substring rows) is stale under another.
+            df, _ = store.get_or_compute(spark, f"{name}.{method_key}", compute)
             return df
         finally:
             spark.sparkContext.setJobDescription(None)
@@ -218,108 +230,53 @@ def run(
     pair_frames: list[DataFrame] = []
     if "exact" in methods:
         pair_frames.append(stage("pairs_exact", lambda: exact_pairs(membership)))
-    if "minhash" in methods or "substring" in methods or "simhash" in methods:
-        # signatures are the expensive stage — checkpoint them so a resumed
-        # run skips straight to pairing (J5 cache-hit semantics)
-        if "minhash" in methods and "substring" in methods:
-            # ONE-PASS signatures: minhash + winnow fingerprints computed in
-            # a single Arrow transfer of the text (the text column is the
-            # pipeline's dominant byte stream and bytes-moved is the
-            # measured scaling ceiling — two separate full passes was the
-            # r2 design). Narrow output (~1.3 KB/row); wide shingle arrays
-            # never leave the Python worker. Eager: band stats + band join
-            # + all three substring consumers race this frame.
-            # Stage name is 'signatures_dual', NOT 'signatures': the store
-            # keys a stage by (name, config_hash) and the two signature
-            # shapes differ by schema — a minhash-only run's cached
-            # (url, minhash) table resumed under a methods set that also
-            # needs winnow fps would fail downstream (r3 ADVICE #2).
-            dual = stage(
-                "signatures_dual",
-                lambda: _truncate(with_dual_signatures(reps, cfg))[0],
-            )
-            sigs = dual.select("url", "minhash")
-            # the minhash chain (band stats + candidate/verify barriers) and
-            # the substring chain (fingerprint df-cap barrier) are
-            # independent until the pair union — submit them from two driver
-            # threads so their barrier jobs overlap instead of serializing
-            # (guide §2.6: actions are only sequential because the driver
-            # calls them sequentially; FIFO scheduling back-fills the tail
-            # of one chain's stages with the other's tasks). Both read only
-            # the materialized dual checkpoint, so there is no shared
-            # unmaterialized frame to race; job descriptions are
-            # thread-local, so each chain keeps its own label. Store-backed
-            # runs stay sequential: the store manifest commit is
-            # read-modify-write, and two concurrent stage completions could
-            # drop one entry (resume correctness beats the overlap).
-            if store is None:
-                from concurrent.futures import ThreadPoolExecutor
+    kinds = tuple(kind for m, kind in _SIGNATURE_KIND if m in methods)
+    if kinds:
+        # ONE signature stage for every text method: one pandas UDF computes
+        # exactly the requested kinds in a single Arrow transfer of the text
+        # (the pipeline's dominant byte stream; bytes moved are the measured
+        # scaling ceiling). Only url, the substring pass's 8-byte uid and
+        # the narrow signatures are checkpointed, never the text. Eager:
+        # every pair chain below reads it, and their barriers race. The
+        # default method set keeps the 'signatures_dual' tag, by which its
+        # per-stage metrics are read back.
+        sigs = stage(
+            "signatures_dual"
+            if set(methods) == set(DEFAULT_METHODS) else "signatures",
+            lambda: _truncate(
+                with_signatures(reps, cfg, kinds=kinds).select(
+                    F.xxhash64("url").alias("uid"), "url", *kinds
+                )
+            )[0],
+        )
+        chains = (
+            ("minhash", lambda: minhash_pairs(
+                reps, cfg, sigs=sigs, registry=persisted)),
+            ("substring", lambda: substring_pairs(
+                reps, cfg, registry=persisted, fp_arrays=sigs)),
+            ("simhash", lambda: simhash_pairs(
+                None, cfg, sigs=sigs, registry=persisted)),
+        )
+        requested = [(f"pairs_{m}", c) for m, c in chains if m in methods]
+        # the pair chains are independent until the pair union — submit them
+        # from one driver thread each so their barrier jobs overlap instead
+        # of serializing (guide §2.6: actions are only sequential because
+        # the driver calls them sequentially; FIFO scheduling back-fills the
+        # tail of one chain's stages with another's tasks). All read only
+        # the materialized signature checkpoint, so there is no shared
+        # unmaterialized frame to race; job descriptions are thread-local,
+        # so each chain keeps its own label. Store-backed runs stay
+        # sequential: the store manifest commit is read-modify-write, and
+        # two concurrent stage completions could drop one entry (resume
+        # correctness beats the overlap).
+        if store is None:
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f_mh = pool.submit(
-                        stage,
-                        "pairs_minhash",
-                        lambda: minhash_pairs(
-                            reps, cfg, sigs=sigs, registry=persisted
-                        ),
-                    )
-                    f_ss = pool.submit(
-                        stage,
-                        "pairs_substring",
-                        lambda: substring_pairs(
-                            reps, cfg, registry=persisted, fp_arrays=dual
-                        ),
-                    )
-                    pair_frames.append(f_mh.result())
-                    pair_frames.append(f_ss.result())
-            else:
-                pair_frames.append(
-                    stage(
-                        "pairs_minhash",
-                        lambda: minhash_pairs(
-                            reps, cfg, sigs=sigs, registry=persisted
-                        ),
-                    )
-                )
-                pair_frames.append(
-                    stage(
-                        "pairs_substring",
-                        lambda: substring_pairs(
-                            reps, cfg, registry=persisted, fp_arrays=dual
-                        ),
-                    )
-                )
-        elif "minhash" in methods:
-            # narrow minhash-only signatures (~1 KB/row; the wide shingle
-            # arrays stay in the Python worker — emitting+caching them for
-            # every doc was the 32-core DRAM anti-scaler, r02 profile).
-            # Eager: bands stats + band join consume this concurrently.
-            sigs = stage(
-                "signatures",
-                lambda: _truncate(
-                    with_signatures(reps, cfg).select("url", "minhash")
-                )[0],
-            )
-            pair_frames.append(
-                stage(
-                    "pairs_minhash",
-                    lambda: minhash_pairs(reps, cfg, sigs=sigs, registry=persisted),
-                )
-            )
-        elif "substring" in methods:
-            pair_frames.append(
-                stage(
-                    "pairs_substring",
-                    lambda: substring_pairs(reps, cfg, registry=persisted),
-                )
-            )
-        if "simhash" in methods:
-            pair_frames.append(
-                stage(
-                    "pairs_simhash",
-                    lambda: simhash_pairs(reps, cfg, registry=persisted),
-                )
-            )
+            with ThreadPoolExecutor(max_workers=len(requested)) as pool:
+                futures = [pool.submit(stage, n, c) for n, c in requested]
+                pair_frames.extend(f.result() for f in futures)
+        else:
+            pair_frames.extend(stage(n, c) for n, c in requested)
 
     # pairs is consumed by union-find AND returned as an output — eager, so
     # the heavy verify/vote join subtrees run exactly once (and the
@@ -337,12 +294,12 @@ def run(
     pairs = stage("pairs", _pairs)
 
     def _components() -> DataFrame:
-        # the hint lets union-find build its right-sized adjacency in one
-        # pass; it is the pairs checkpoint's own materializing count, so
-        # only a stage resumed from the store (which skipped _pairs) counts
-        # again. The result's checkpoint is freed by release().
+        # the hint sizes union-find's adjacency; it is the pairs
+        # checkpoint's own materializing count, so only a stage resumed
+        # from the store (which skipped _pairs) lets union-find count the
+        # edges again. The result's checkpoint is freed by release().
         out, ids = tracked_connected_components(
-            pairs, n_edges_hint=n_pairs[0] if n_pairs else pairs.count()
+            pairs, n_edges_hint=n_pairs[0] if n_pairs else None
         )
         ckpt_ids.update(ids)
         return out

@@ -21,15 +21,13 @@ alternative per the north rule.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
-from .minhash import _token_hash
+from .minhash import _token_hash, with_signatures
 
 _U64 = np.uint64
 _BIGRAM_MIX = _U64(0xC2B2AE3D27D4EB4F)
@@ -162,27 +160,6 @@ def _batch_simhash(texts: list[str], token_hash=_token_hash) -> np.ndarray:
     return out
 
 
-def make_simhash_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    token_hash = _TOKEN_HASHES[cfg.simhash_token_hash]
-
-    @pandas_udf(LongType())
-    def simhash64(text: pd.Series) -> pd.Series:
-        return pd.Series(
-            _batch_simhash(
-                [t if t is not None else "" for t in text], token_hash
-            )
-        )
-
-    return simhash64
-
-
-def with_simhash(reps: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
-    udf = make_simhash_udf(cfg)
-    return reps.withColumn("simhash", udf(F.col("extracted")))
-
-
 def _band_cols(cfg: DedupConfig):
     nb = cfg.simhash_bands
     width = 64 // nb
@@ -233,7 +210,11 @@ def incremental_simhash_pairs(
     least one new doc. The index grows with the whole corpus, so its hot
     buckets (e.g. near-empty docs all hashing to simhash 0) are capped
     exactly like the batch path (bands.banded_pairs, incremental mode)."""
-    new_sigs = with_simhash(new_reps, cfg).select("url", "simhash").localCheckpoint()
+    new_sigs = (
+        with_signatures(new_reps, cfg, kinds=("simhash",))
+        .select("url", "simhash")
+        .localCheckpoint()
+    )
     all_sigs = existing_sigs.select("url", "simhash").unionByName(new_sigs)
     cands = banded_pairs(
         _band_index(all_sigs, cfg), cfg, ["simhash"], probes=_band_index(new_sigs, cfg)
@@ -265,6 +246,6 @@ def simhash_pairs(
     """
     if sigs is None:
         # no persist: the band table cache is the signatures' only consumer
-        sigs = with_simhash(reps, cfg)
+        sigs = with_signatures(reps, cfg, kinds=("simhash",))
     cands = banded_pairs(_band_index(sigs, cfg), cfg, ["simhash"], registry=registry)
     return _within_radius(cands, cfg)

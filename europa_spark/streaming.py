@@ -67,19 +67,18 @@ def _state_path_exists(spark: SparkSession, p: str) -> bool:
     return fs.exists(path)
 
 
-def _read_seen(spark: SparkSession, state_dir: str, before_batch: int) -> DataFrame:
-    """Seen-state visible to ``before_batch``: only partitions committed by
-    EARLIER batches — a replayed batch never sees its own prior output.
-    Read failures on an EXISTING dir (corruption, IO errors) propagate."""
-    p = _seen_path(state_dir)
-    if not _state_path_exists(spark, p):
-        return spark.createDataFrame(
-            [], "content_hash string, first_url string"
-        )
-    df = spark.read.parquet(p)
-    return df.filter(F.col("batch_id") < before_batch).select(
-        "content_hash", "first_url"
-    )
+def _read_state(
+    spark: SparkSession, path: str, schema: str, before_batch: int
+) -> DataFrame:
+    """Per-batch state visible to ``before_batch``: only partitions
+    committed by EARLIER batches — a replayed batch never sees its own prior
+    output. A missing dir is the first batch's empty state; read failures
+    on an EXISTING dir (corruption, IO errors) propagate."""
+    if not _state_path_exists(spark, path):
+        return spark.createDataFrame([], schema)
+    df = spark.read.parquet(path)
+    cols = [c.strip().split(" ")[0] for c in schema.split(",")]
+    return df.filter(F.col("batch_id") < before_batch).select(*cols)
 
 
 def process_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
@@ -89,7 +88,10 @@ def process_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
         "url", content_hash_col().alias("content_hash")
     ).localCheckpoint()
 
-    seen = _read_seen(spark, state_dir, batch_id)
+    seen = _read_state(
+        spark, _seen_path(state_dir), "content_hash string, first_url string",
+        batch_id,
+    )
     joined = hashed.join(
         seen.withColumnRenamed("first_url", "seen_url"), "content_hash", "left"
     ).localCheckpoint()
@@ -173,16 +175,6 @@ def _sigs_path(state_dir: str) -> str:
 
 def _pairs_path(state_dir: str) -> str:
     return os.path.join(state_dir, "pairs")
-
-
-def _read_state(
-    spark: SparkSession, path: str, schema: str, before_batch: int
-) -> DataFrame:
-    if not _state_path_exists(spark, path):  # first batch: empty state
-        return spark.createDataFrame([], schema)
-    df = spark.read.parquet(path)  # corruption/IO errors propagate
-    cols = [c.strip().split(" ")[0] for c in schema.split(",")]
-    return df.filter(F.col("batch_id") < before_batch).select(*cols)
 
 
 def process_batch_neardup(

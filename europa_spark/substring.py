@@ -21,13 +21,12 @@ fan-out at O(max_df^2) per hot fingerprint.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from .config import DedupConfig, CANONICAL
+from .minhash import with_signatures
 
 _U64 = np.uint64
 _ROLL_BASE = _U64(1099511628211)  # FNV prime, odd
@@ -173,20 +172,6 @@ def _batch_winnow(texts: list[str], k: int, w: int) -> list[np.ndarray]:
     return out
 
 
-def make_winnow_udf(cfg: DedupConfig = CANONICAL):
-    from pyspark.sql.functions import pandas_udf
-
-    k, w = cfg.winnow_kgram, cfg.winnow_window
-
-    @pandas_udf(ArrayType(LongType()))
-    def winnow_fingerprints(text: pd.Series) -> pd.Series:
-        arrs = _batch_winnow([t if t is not None else "" for t in text], k, w)
-        # ndarray values: Arrow's fast path, no per-element int boxing
-        return pd.Series([a.view(np.int64) for a in arrs], dtype=object)
-
-    return winnow_fingerprints
-
-
 def substring_pairs(
     reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
@@ -201,9 +186,9 @@ def substring_pairs(
     aggregation, exactly the LSH shape).
 
     ``fp_arrays``: optional precomputed (uid, url, fps) relation — the
-    pipeline passes the dual-signature table so the text crosses to Python
-    once for minhash AND winnowing (minhash.with_dual_signatures); it must
-    already be materialized.
+    pipeline passes its one signature table so the text crosses to Python
+    once for every method (minhash.with_signatures); it must already be
+    materialized.
 
     ``registry=None``: nothing is cached and no job runs; the result is a
     lazy plan. Pass a registry to cache the fingerprint relations behind
@@ -301,10 +286,8 @@ def with_fingerprints(reps: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFram
     to final pair rows only. 64-bit keys are collision-safe to ~10^9 docs
     per partition-job; the 10^12-scale deployment note in SURVEY.md §4
     calls for a 128-bit key."""
-    fp_udf = make_winnow_udf(cfg)
-    return reps.select(
-        F.xxhash64("url").alias("uid"), "url",
-        fp_udf(F.col("extracted")).alias("fps"),
+    return with_signatures(reps, cfg, kinds=("fps",)).select(
+        F.xxhash64("url").alias("uid"), "url", "fps"
     )
 
 

@@ -100,11 +100,7 @@ def test_incremental_simhash_hot_bucket_salted_probe(spark):
     """Same pin for the simhash incremental index (the r3 ADVICE #3 twin):
     hot-bucket probes pair with the anchor plus their salted sub-bucket."""
     from europa_spark.config import DedupConfig
-    from europa_spark.simhash import (
-        _band_cols,
-        incremental_simhash_pairs,
-        with_simhash,
-    )
+    from europa_spark.simhash import _band_cols, incremental_simhash_pairs
 
     cfg = DedupConfig(bucket_cap=2, salt_sub_cap=2)
     text = " ".join(f"t{i}" for i in range(100))
@@ -112,7 +108,9 @@ def test_incremental_simhash_hot_bucket_salted_probe(spark):
         [(f"u{i:02d}", text) for i in range(8)], "url string, extracted string"
     )
     new = spark.createDataFrame([("u08", text)], "url string, extracted string")
-    old_sigs = with_simhash(old, cfg).select("url", "simhash")
+    old_sigs = with_signatures(old, cfg, kinds=("simhash",)).select(
+        "url", "simhash"
+    )
     new_sigs, delta = incremental_simhash_pairs(old_sigs, new, cfg)
     got = {(r["url_a"], r["url_b"]) for r in delta.collect()}
     assert all("u08" in p for p in got)

@@ -36,31 +36,39 @@ def test_batch_winnow_equal_reference():
         assert np.array_equal(got, want), t[:40]
 
 
-def test_dual_signature_udf_equals_separate_passes(spark):
-    """The one-pass dual UDF (r3 byte-stream optimization) must emit exactly
-    the same minhash and fingerprint arrays as the two separate passes."""
-    from pyspark.sql import functions as F
-
+def test_signature_family_equals_single_kinds_and_kernels(spark):
+    """One pass of the signature UDF over all kinds must emit exactly what
+    each single-kind pass emits, and exactly what the batch winnow and
+    simhash kernels compute row for row."""
     from europa_spark.config import CANONICAL
-    from europa_spark.minhash import with_dual_signatures, with_signatures
-    from europa_spark.substring import make_winnow_udf
+    from europa_spark.minhash import with_signatures
+    from europa_spark.simhash import _batch_simhash
 
-    rows = [(f"u{i}", t) for i, t in enumerate(_texts())]
+    texts = _texts()
+    rows = [(f"u{i}", t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "url string, extracted string")
-    dual = {
-        r["url"]: (r["minhash"], r["fps"])
-        for r in with_dual_signatures(df, CANONICAL).collect()
+    kinds = ("minhash", "fps", "simhash")
+    every = {
+        r["url"]: r
+        for r in with_signatures(df, CANONICAL, kinds=kinds).collect()
     }
     mh = {
         r["url"]: r["minhash"]
         for r in with_signatures(df, CANONICAL, include_shingles=False).collect()
     }
-    wn = {
-        r["url"]: r["fps"]
-        for r in df.select(
-            "url", make_winnow_udf(CANONICAL)(F.col("extracted")).alias("fps")
-        ).collect()
+    single = {
+        kind: {
+            r["url"]: r[kind]
+            for r in with_signatures(df, CANONICAL, kinds=(kind,)).collect()
+        }
+        for kind in kinds
     }
-    for u in mh:
-        assert dual[u][0] == mh[u], u
-        assert dual[u][1] == wn[u], u
+    fps = _batch_winnow(texts, CANONICAL.winnow_kgram, CANONICAL.winnow_window)
+    sh = _batch_simhash(texts)
+    for i, (u, t) in enumerate(rows):
+        assert every[u]["extracted"] == t, u
+        assert every[u]["minhash"] == mh[u], u
+        for kind in kinds:
+            assert every[u][kind] == single[kind][u], (kind, u)
+        assert every[u]["fps"] == fps[i].view(np.int64).tolist(), u
+        assert every[u]["simhash"] == int(sh[i]), u

@@ -203,3 +203,91 @@ def test_job_group_cancellation(spark):
     assert not t.is_alive(), "action did not abort after cancel"
     assert time.time() - t0 < 60
     assert "cancel" in err.get("e", "").lower(), err.get("e", "no error raised")
+
+
+@pytest.fixture(scope="module")
+def small_docs(spark, tmp_path_factory):
+    """A 300-doc corpus: small enough to run the pipeline once per method
+    set, large enough to plant exact, near and substring duplicates."""
+    from europa_spark.fixtures import generate, write_corpus
+
+    d = str(tmp_path_factory.mktemp("small_corpus"))
+    write_corpus(generate(300, seed=7), d)
+    return spark.read.parquet(f"{d}/documents.parquet")
+
+
+def _run_pairs(docs, methods, store=None):
+    out = run(docs, methods=methods, store=store)
+    try:
+        return {(r["url_a"], r["url_b"]) for r in out["pairs"].collect()}
+    finally:
+        out["release"]()
+
+
+@pytest.fixture(scope="module")
+def standalone_pairs(small_docs):
+    """method -> the (url_a, url_b) set of that method's standalone path on
+    the same representatives pipeline.run pairs."""
+    from europa_spark.exact import (
+        exact_membership,
+        exact_pairs,
+        representatives,
+        with_content_hash,
+    )
+    from europa_spark.extract import split_quarantine, with_extracted
+    from europa_spark.minhash import minhash_pairs
+    from europa_spark.simhash import simhash_pairs
+    from europa_spark.substring import substring_pairs
+
+    clean, _ = split_quarantine(with_extracted(small_docs))
+    clean = clean.select("url", "warc_ts", "extracted").cache()
+    reps = representatives(with_content_hash(clean)).select("url", "extracted")
+    frames = {
+        "exact": exact_pairs(exact_membership(clean)),
+        "minhash": minhash_pairs(reps),
+        "substring": substring_pairs(reps),
+        "simhash": simhash_pairs(reps),
+    }
+    try:
+        return {
+            m: {(r["url_a"], r["url_b"]) for r in f.collect()}
+            for m, f in frames.items()
+        }
+    finally:
+        clean.unpersist()
+
+
+@pytest.mark.parametrize(
+    "methods",
+    [
+        ("exact", "minhash"),
+        ("substring",),
+        ("exact", "minhash", "substring", "simhash"),
+    ],
+)
+def test_method_sets_equal_standalone_union(small_docs, standalone_pairs, methods):
+    """Every method set pairs exactly the distinct union of its methods'
+    standalone paths on the same representatives."""
+    want = set().union(*(standalone_pairs[m] for m in methods))
+    assert want, methods
+    assert _run_pairs(small_docs, methods) == want
+
+
+def test_store_resumed_under_larger_method_set(small_docs, tmp_path):
+    """A store filled under one method set must not hand its stages to a
+    run with another: the resumed run pairs what a store-less run pairs."""
+    root = str(tmp_path / "ckpt")
+    _run_pairs(
+        small_docs, ("exact", "minhash"),
+        CheckpointStore(root, CANONICAL.config_hash()),
+    )
+    methods = ("exact", "minhash", "substring")
+    resumed = _run_pairs(
+        small_docs, methods, CheckpointStore(root, CANONICAL.config_hash())
+    )
+    assert resumed == _run_pairs(small_docs, methods)
+
+
+def test_unknown_method_raises(small_docs):
+    with pytest.raises(ValueError, match="unknown methods"):
+        run(small_docs, methods=("exact", "minhash*"))

@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 from europa_spark.config import DedupConfig
-from europa_spark.simhash import _simhash_np, simhash_pairs, with_simhash
+from europa_spark.minhash import with_signatures
+from europa_spark.simhash import _simhash_np, simhash_pairs
 
 
 def test_simhash_deterministic_and_sensitive():
@@ -48,7 +49,10 @@ def test_pigeonhole_pairs(spark):
     cfg = DedupConfig(simhash_hamming_d=6, simhash_bands=8)
     got = {(r["url_a"], r["url_b"]): r["score"]
            for r in simhash_pairs(df, cfg).collect()}
-    sigs = {r["url"]: r["simhash"] for r in with_simhash(df).collect()}
+    sigs = {
+        r["url"]: r["simhash"]
+        for r in with_signatures(df, kinds=("simhash",)).collect()
+    }
 
     def ham(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
@@ -82,7 +86,10 @@ def test_fnv_simhash_banded_pairs_equal_bruteforce(spark, docs_df):
     cfg = DedupConfig(simhash_token_hash="fnv1a")
     clean, _ = split_quarantine(with_extracted(docs_df))
     reps = clean.select("url", "extracted").limit(600)
-    sigs = {r["url"]: r["simhash"] for r in with_simhash(reps, cfg).collect()}
+    sigs = {
+        r["url"]: r["simhash"]
+        for r in with_signatures(reps, cfg, kinds=("simhash",)).collect()
+    }
 
     def ham(a: int, b: int) -> int:
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")

@@ -208,21 +208,18 @@ def test_corrupted_state_raises_not_restarts(spark, tmp_path):
     (ADVICE r2: narrow to missing-path only)."""
     import pytest
 
-    from europa_spark.streaming import _read_seen, _read_state
+    from europa_spark.streaming import _read_state
 
+    schema = "content_hash string, first_url string"
     state = tmp_path / "corrupt_state"
     seen = state / "seen"
     os.makedirs(seen)
     (seen / "part-00000.parquet").write_bytes(b"this is not parquet at all")
     with pytest.raises(Exception):
-        _read_seen(spark, str(state), before_batch=1).collect()
-    with pytest.raises(Exception):
-        _read_state(
-            spark, str(seen), "content_hash string, first_url string", 1
-        ).collect()
+        _read_state(spark, str(seen), schema, before_batch=1).collect()
 
     # a genuinely MISSING dir still reads as empty first-batch state
-    empty = _read_seen(spark, str(tmp_path / "never_written"), 1)
+    empty = _read_state(spark, str(tmp_path / "never_written" / "seen"), schema, 1)
     assert empty.count() == 0
 
 
