@@ -667,9 +667,11 @@ def _q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_sketch_media,
     )
 
+    # materialized once: each band-join branch reads the signatures, and a
+    # lazy frame reruns the sketch UDF and the decode/hash map per branch
     sigs = media_signatures(
         text_sketch_media(_assert_ascii(_clean(spark, sf_dir)), token_hash="fnv1a")
-    )
+    ).localCheckpoint()
     return media_phash_pairs(sigs).select("url_a", "url_b", "score")
 
 
@@ -688,9 +690,11 @@ def _q_media_blockmean_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_sketch_media,
     )
 
+    # materialized once: each band-join branch reads the signatures, and a
+    # lazy frame reruns the sketch UDF and the decode/hash map per branch
     sigs = media_signatures(
         text_sketch_media(_assert_ascii(_clean(spark, sf_dir)), token_hash="fnv1a")
-    )
+    ).localCheckpoint()
     return media_blockmean_pairs(sigs).select("url_a", "url_b", "score")
 
 
@@ -752,9 +756,10 @@ def _q_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_near_dups,
     )
 
+    # materialized once, as in _q_media_phash_pairs
     sigs = video_frame_signatures(
         text_sketch_video(_assert_ascii(_clean(spark, sf_dir)), token_hash="fnv1a")
-    )
+    ).localCheckpoint()
     return video_near_dups(sigs).select("url_a", "url_b", "score")
 
 

@@ -83,10 +83,11 @@ def banded_pairs(
 
 
 def _bucket_stats(index: DataFrame, payload: list) -> DataFrame:
-    # hash aggregation (map-side partial combine), NOT a window: a window
-    # would shuffle+sort the whole band table, while the aggregate shuffles
-    # one compact row per bucket and the filter drops the singleton buckets
-    # (the vast majority) before the join
+    # aggregation (map-side partial combine), NOT a window: a window would
+    # shuffle+sort the whole band table, while the aggregate shuffles one
+    # compact row per bucket and the filter drops the singleton buckets
+    # (the vast majority) before the join. min over the string url plans
+    # as a SortAggregate (each side sorts its partition), not a hash one
     return (
         index.groupBy(*KEY)
         .agg(

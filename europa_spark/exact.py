@@ -77,12 +77,14 @@ def exact_membership(
     hashed = with_content_hash(clean, cfg, use_cascade).select(
         "url", "warc_ts", "content_hash"
     )
-    # hash-aggregate + join, NOT a window over content_hash: the window form
+    # aggregate + join, NOT a window over content_hash: the window form
     # funnels EVERY row of a hot hash through one task (at web scale a
     # boilerplate group has 10^6-10^8 members — one task sorting the whole
     # group), while the aggregation's map-side partial combine absorbs the
     # hot key and the join streams. AQE skew-join splitting covers the
-    # residual join-side hotness.
+    # residual join-side hotness. Spark plans min over a string as a
+    # SortAggregate (each partial and final side sorts its partition by
+    # the key), not a HashAggregate; a count-only aggregate would hash.
     stats = hashed.groupBy("content_hash").agg(
         F.count("*").alias("group_size"),
         F.min("url").alias("exact_group_id"),
@@ -144,8 +146,9 @@ def representatives(
     run on this collapsed set: on boilerplate-heavy webtext this is the
     single biggest constant-factor win (SURVEY.md §4).
 
-    Winner selection is a hash aggregation + semi-join, NOT a row_number
-    window over content_hash: the window shuffles the full WIDE rows by
+    Winner selection is an aggregation (min over the string url, which
+    Spark plans as a SortAggregate, not a HashAggregate) + semi-join, NOT a
+    row_number window over content_hash: the window shuffles the full WIDE rows by
     content_hash, so a hot hash (an identical-boilerplate group with
     10^6-10^8 members at web scale) lands in ONE task that sorts the whole
     group's text, while the agg partial-combines map-side and the semi-join

@@ -428,26 +428,6 @@ def _batch_pair_jaccard(texts_a, texts_b, k: int) -> np.ndarray:
     return np.where(union > 0, inter / np.maximum(union, 1), np.nan)
 
 
-def make_pair_jaccard_udf(cfg: DedupConfig = CANONICAL):
-    """Vectorized exact-Jaccard kernel over (text_a, text_b) pairs: both
-    shingle sets are recomputed IN the kernel (chunked batch hasher, each
-    distinct text in the batch shingled once — star-edge anchors repeat
-    across pairs) and only the double score leaves Python: |A∩B|/|A∪B| over
-    the blake2b k-gram hash sets of with_signatures, IEEE double division."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    k = cfg.shingle_k
-
-    @pandas_udf(DoubleType())
-    def pair_jaccard(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-        return pd.Series(
-            _batch_pair_jaccard(list(text_a), list(text_b), k)
-        )
-
-    return pair_jaccard
-
-
 def verify_pairs(
     candidates: DataFrame,
     sigs: DataFrame,
@@ -459,8 +439,9 @@ def verify_pairs(
 
     Candidate pairs join the pruned TEXT (the pair table broadcast when
     hinted, so the first join is map-side) and one vectorized kernel
-    (make_pair_jaccard_udf) recomputes both shingle sets per pair, emitting
-    only the score. The text (~2.5-4.2 KB/doc on webtext) is NARROWER than
+    (_batch_pair_jaccard) recomputes both shingle sets per pair in an Arrow
+    map that also applies the threshold, emitting only the kept pairs. The
+    text (~2.5-4.2 KB/doc on webtext) is NARROWER than
     the ~5.6 KB/doc shingle-hash arrays derived from it, and string pages
     shuffle far cheaper than BIGINT-array rows — a verify that joined the
     arrays measured 0.326 scaling efficiency at 1M rows, below the 0.41
@@ -482,21 +463,39 @@ def verify_pairs(
     if registry is not None:
         registry.append(pruned.persist())
         pruned.count()  # both text joins consume this — don't race the scan
-    pj = make_pair_jaccard_udf(cfg)
+    k, t = cfg.shingle_k, cfg.jaccard_threshold
+
+    def verify(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            score = _batch_pair_jaccard(
+                rb.column("text_a").to_pylist(), rb.column("text_b").to_pylist(), k
+            )
+            # a NaN score (empty union; unreachable from text, where "" is
+            # one token) is dropped: a pandas NaN reaches the JVM as null,
+            # which fails Spark's >= too
+            keep = score >= t
+            mask = pa.array(keep)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("url_a").filter(mask), rb.column("url_b").filter(mask),
+                 pa.array(score[keep])],
+                names=["url_a", "url_b", "score"],
+            )
+
     a = pruned.select(
         F.col("url").alias("url_a"), F.col("extracted").alias("text_a")
     )
     b = pruned.select(
         F.col("url").alias("url_b"), F.col("extracted").alias("text_b")
     )
-    j = (
+    return (
         maybe_broadcast(candidates, cfg)
         .join(a, "url_a")
         .join(b, "url_b")
-        .withColumn("score", pj(F.col("text_a"), F.col("text_b")))
-    )
-    return (
-        j.filter(F.col("score") >= F.lit(cfg.jaccard_threshold))
+        # one map scores AND filters: a filter on a pandas-UDF score column
+        # is pushed below its projection, so the UDF would run twice per pair
+        .mapInArrow(verify, "url_a string, url_b string, score double")
         .select("url_a", "url_b", F.lit("minhash").alias("method"), "score")
     )
 

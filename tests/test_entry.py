@@ -40,3 +40,43 @@ def test_cross_join_queries_refuse_large_inputs(spark, monkeypatch, name):
     monkeypatch.setattr(entrymod, "_QUADRATIC_MAX_DOCS", 499)
     with pytest.raises(ValueError, match="accept at most 499"):
         entrymod.queries()[name](spark, SF)
+
+
+def _kernel_stages(spark, group_id: str) -> dict[str, int]:
+    """Completed stages per Python plan node (ArrowEvalPython: a pandas UDF;
+    MapInPandas: a map) among the group's jobs, read from the status
+    store's per-stage operation graphs."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    counts: dict[str, int] = {}
+    for jid in sc.statusTracker().getJobIdsForGroup(group_id):
+        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
+            info = sc.statusTracker().getStageInfo(sid)
+            if info is None or info.numCompletedTasks == 0:
+                continue  # skipped: its output was reused
+            names, stack = set(), [store.operationGraphForStage(sid).rootCluster()]
+            while stack:
+                c = stack.pop()
+                names.add(c.name())
+                ch = c.childClusters()
+                stack.extend(ch.apply(i) for i in range(ch.size()))
+            for nm in names & {"ArrowEvalPython", "MapInPandas"}:
+                counts[nm] = counts.get(nm, 0) + 1
+    return counts
+
+
+@pytest.mark.parametrize(
+    "name", ["media_phash_pairs", "media_blockmean_pairs", "video_dup_pairs"]
+)
+def test_media_pair_queries_run_each_kernel_once(spark, name):
+    """The sketch pandas UDF and the decode/hash map run in one stage each:
+    every band-join branch reads the one materialized signature frame (a
+    lazy frame reran both kernels per branch: 3, 3 and 2 times)."""
+    from europa_spark.cancel import JobGroup
+
+    group = JobGroup(spark, f"kernels-{name}")
+    with group:
+        entrymod.queries()[name](spark, SF).count()
+    assert _kernel_stages(spark, group.group_id) == {
+        "ArrowEvalPython": 1, "MapInPandas": 1,
+    }

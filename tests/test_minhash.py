@@ -14,6 +14,7 @@ from europa_spark.minhash import (
     _batch_shingle_hashes,
     band_table,
     candidate_pairs,
+    incremental_minhash_pairs,
     minhash_pairs,
     verify_pairs,
     with_signatures,
@@ -171,11 +172,23 @@ def test_band_join_is_narrow(spark, sigs):
         assert "shingles" not in line and "minhash" not in line, line
 
 
+def _set_jaccard(reps, pairs, k: int) -> dict:
+    """Driver-side reference: |A∩B|/|A∪B| over Python sets of each url's
+    shingle hashes, for every (url_a, url_b) in ``pairs``."""
+    ext = {r["url"]: r["extracted"] for r in reps.collect()}
+    urls = sorted({u for p in pairs for u in p})
+    sets = dict(zip(urls, (
+        set(a.tolist())
+        for a in _batch_shingle_hashes([ext[u] for u in urls], k)
+    )))
+    return {(a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b]) for a, b in pairs}
+
+
 def test_verify_strategy_and_margin_equivalence(spark, reps, sigs):
     """The rehash verify must score every confirmed pair exactly as a
     driver-side |A∩B|/|A∪B| over Python sets of the same shingle hashes,
-    and confirm every verified candidate that reference puts at or above
-    the threshold; the est_prefilter margin must drop nothing at the
+    and confirm exactly the candidates that reference puts at or above the
+    threshold, no more and no fewer; the est_prefilter margin must drop nothing at the
     canonical config (P(false drop) ~ 1e-5 per true pair)."""
     base = {
         (r["url_a"], r["url_b"], r["score"])
@@ -187,21 +200,12 @@ def test_verify_strategy_and_margin_equivalence(spark, reps, sigs):
         (r["url_a"], r["url_b"])
         for r in candidate_pairs(band_table(sigs)).collect()
     ]
-    ext = {r["url"]: r["extracted"] for r in reps.collect()}
-    urls = sorted({u for p in cands for u in p})
-    sets = dict(zip(urls, (
-        set(a.tolist())
-        for a in _batch_shingle_hashes([ext[u] for u in urls], cfg.shingle_k)
-    )))
-
-    def ref(a, b):
-        return len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-
+    ref = _set_jaccard(reps, cands, cfg.shingle_k)
     for a, b, score in base:
-        assert score == ref(a, b), (a, b, score, ref(a, b))
-    expected = {(a, b) for a, b in cands if ref(a, b) >= cfg.jaccard_threshold}
-    missing = expected - {(a, b) for a, b, _ in base}
-    assert not missing, sorted(missing)[:5]
+        assert score == ref[a, b], (a, b, score, ref[a, b])
+    expected = {p for p in cands if ref[p] >= cfg.jaccard_threshold}
+    got = {(a, b) for a, b, _ in base}
+    assert got == expected, (sorted(expected - got)[:5], sorted(got - expected)[:5])
     margin_cfg = DedupConfig(verify_est_margin=0.15)
     got_margin = {
         (r["url_a"], r["url_b"], r["score"])
@@ -266,3 +270,59 @@ def test_pair_functions_without_registry_are_lazy(spark, reps):
         substring_pairs(reps)
     assert list(sc.statusTracker().getJobIdsForGroup(group.group_id)) == []
     assert persisted() == before
+
+
+def _python_evals(df) -> list[str]:
+    """Names of the Python-evaluation nodes in df's optimized plan."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Python" in name or name.startswith("MapIn"):
+            out.append(name)
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def test_verify_evaluates_each_pair_once(spark, reps, sigs):
+    """Verify scores and filters in one Arrow map, so its optimized plan
+    holds one Python evaluation, in the batch and the incremental path. A
+    pandas-UDF score column under the threshold filter planned two stacked
+    ArrowEvalPython nodes (Catalyst pushes the filter below the projection):
+    every pair's texts crossed to Python and were scored twice."""
+    cands = candidate_pairs(band_table(sigs))
+    assert _python_evals(verify_pairs(cands, reps)) == ["MapInArrow"]
+    old = sigs.filter(F.crc32("url") % 4 != 0)
+    new = reps.filter(F.crc32("url") % 4 == 0)
+    _, delta = incremental_minhash_pairs(old, new)
+    assert _python_evals(delta) == ["MapInArrow"]
+
+
+def test_verify_threshold_and_empty_texts(spark):
+    """The map keeps a pair iff its score reaches jaccard_threshold, with
+    that score. An empty (or null) text is one empty token, never an empty
+    shingle set: two such texts score 1.0 and are confirmed."""
+    words = [f"t{i}" for i in range(20)]  # 16 distinct 5-shingles
+
+    def edit(i):
+        return " ".join(words[:i] + ["zz"] + words[i + 1:])
+
+    sigs = spark.createDataFrame(
+        [("a", ""), ("b", ""), ("c", None), ("d", " ".join(words)),
+         ("e", edit(19)), ("f", edit(10))],
+        "url string, extracted string",
+    )
+    cands = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("a", "d"), ("d", "e"), ("d", "f")],
+        "url_a string, url_b string",
+    )
+    got = {
+        (r["url_a"], r["url_b"], r["method"], r["score"])
+        for r in verify_pairs(cands, sigs).collect()
+    }
+    # d/e share 15 of 17 shingles (0.88); d/f share 11 of 21 (0.52)
+    assert got == {
+        ("a", "b", "minhash", 1.0), ("a", "c", "minhash", 1.0),
+        ("d", "e", "minhash", 15 / 17),
+    }

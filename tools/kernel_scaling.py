@@ -10,8 +10,8 @@ memory-bandwidth-limited (scales like the numpy streaming ceiling, ~1.6x at
 Kernels measured (the exact functions the pandas UDFs call):
   * dual_signature — _batch_shingle_hashes + _minhash_of + _batch_winnow
     (the `signatures_dual` stage)
-  * pair_verify    — the rehash pair-Jaccard kernel body
-    (the Python side of the `pairs` stage's verify join)
+  * pair_verify    — _batch_pair_jaccard (the Python side of the
+    `pairs` stage's verify map)
   * simhash        — _batch_simhash (the `pairs_simhash` signature kernel)
   * numpy_stream   — big-array copy, the DRAM bandwidth ceiling row
 
@@ -83,29 +83,12 @@ def _task_dual(rng: tuple[int, int]):
 
 
 def _task_pairs(rng: tuple[int, int]):
-    # the make_pair_jaccard_udf body, minus the pandas wrapper
     from europa_spark.config import CANONICAL
-    from europa_spark.minhash import _batch_shingle_hashes
+    from europa_spark.minhash import _batch_pair_jaccard
 
     text_a = [_TEXTS[i] for i in _PAIR_A[rng[0] : rng[1]]]
     text_b = [_TEXTS[i] for i in _PAIR_B[rng[0] : rng[1]]]
-    k = CANONICAL.shingle_k
-    uniq: dict[str, int] = {}
-    n = len(text_a)
-    idx_a = np.empty(n, dtype=np.int64)
-    idx_b = np.empty(n, dtype=np.int64)
-    for i, t in enumerate(text_a):
-        idx_a[i] = uniq.setdefault(t if t is not None else "", len(uniq))
-    for i, t in enumerate(text_b):
-        idx_b[i] = uniq.setdefault(t if t is not None else "", len(uniq))
-    arrs = _batch_shingle_hashes(list(uniq), k)
-    out = np.empty(n, dtype=np.float64)
-    for i in range(n):
-        va, vb = arrs[idx_a[i]], arrs[idx_b[i]]
-        inter = np.intersect1d(va, vb, assume_unique=True).size
-        union = va.size + vb.size - inter
-        out[i] = inter / union if union else np.nan
-    return float(out.sum())
+    return float(_batch_pair_jaccard(text_a, text_b, CANONICAL.shingle_k).sum())
 
 
 def _task_simhash(rng: tuple[int, int]):
