@@ -3,25 +3,24 @@ analog of the reference's Qdrant layer (Api/Client/QdrantRepository.cs:
 184-206: radius/top-k search over named vectors), for tables like
 embeddings(vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
 
-Three tiers:
-  * knn_exact_quantized — brute-force top-k by integer-quantized dot product
-    (floor(x*1000)); integer arithmetic makes results bit-identical across
-    engines, so this is the DuckDB-oracle-gated variant;
-  * knn_cosine — brute-force float cosine top-k via numpy inside
-    mapInPandas (Arrow batches, broadcast right side) — the exact baseline;
+Every search runs where the data lives; none collects or broadcasts the
+embedding table:
+  * knn_exact_quantized_blocked / knn_cosine_blocked — exact top-k over a
+    block-grid cogroup (integer-quantized dot floor(x*1000), bit-identical
+    across engines and so DuckDB-oracle-gated; or float cosine);
   * ann_lsh — random-hyperplane LSH (L tables x nbits sign bits -> bucket
-    equi-join -> exact cosine verify -> top-k): the scale path; bucket
-    equi-joins distribute exactly like the text LSH band joins.
+    equi-join -> exact cosine re-rank -> top-k);
+  * ann_ivf — inverted lists over a sampled k-means coarse quantizer (the
+    driver holds only the sample and the n_cells x dim centroids);
+  * embedding_dup_pairs_lsh — near-duplicate pairs: hyperplane buckets,
+    then an integer cosine predicate.
 
-Scale notes: brute force is O(n^2) and exists as the correctness baseline;
-ann_lsh is O(n * bucket) with the same skew-cap story as minhash.py. At real
-scale the right side of knn_cosine becomes an IVF partition assignment
-instead of a broadcast — the plumbing (schema, batching) is identical.
+Scale notes: the block grid is O(n^2) work in O(n/B)-row tasks and is the
+exact reference; the bucket and cell joins are O(n * bucket) and distribute
+like the text LSH band joins (minhash.py).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,49 +31,8 @@ from pyspark.sql import functions as F
 QUANT_SCALE = 1000
 
 
-def _quant(col):
-    return F.transform(col, lambda x: F.floor(x * QUANT_SCALE).cast("long"))
-
-
-def knn_exact_quantized(emb: DataFrame, k: int = 5) -> DataFrame:
-    """Top-k neighbors per vector by quantized dot product.
-    Output: (vec_id, neighbor_id, qdot, rank) — deterministic ties by
-    neighbor_id.
-
-    Implementation: int64 numpy matmul against a broadcast quantized matrix
-    inside mapInPandas — bit-identical to the per-pair SQL formulation (exact
-    integer arithmetic) but ~50x faster than expression-per-pair aggregation;
-    the DuckDB oracle keeps the relational formulation."""
-    rows = emb.select("vec_id", _quant(F.col("embedding")).alias("qv")).collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["qv"] for r in rows], dtype=np.int64)
-    spark = emb.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        M, I = b_mat.value, b_ids.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            D = Q @ M.T  # exact int64 dots
-            qids = pdf["vec_id"].to_numpy()
-            res = []
-            for r, qid in enumerate(qids):
-                d = D[r]
-                mask = I != qid
-                order = np.lexsort((I[mask], -d[mask]))[:k]
-                ii, dd = I[mask], d[mask]
-                for rank, j in enumerate(order, 1):
-                    res.append((qid, ii[j], dd[j], rank))
-            yield pd.DataFrame(
-                res, columns=["vec_id", "neighbor_id", "qdot", "rank"]
-            )
-
-    return emb.select(
-        "vec_id", _quant(F.col("embedding")).alias("qv")
-    ).mapInPandas(compute, "vec_id long, neighbor_id long, qdot long, rank int")
+def _quant(col, scale: int):
+    return F.transform(col, lambda x: F.floor(x * scale).cast("long"))
 
 
 def knn_exact_quantized_sql(k: int = 5) -> str:
@@ -161,15 +119,14 @@ def _knn_blocked(
     shuffle is O(n * B * dim) rows. Per-block top-k (k rows per query per
     right block) shrinks the merge input to n*B*k tiny rows before the
     global window. Top-k is decomposable, so the result is EXACTLY the
-    all-pairs answer — same rows as knn_exact_quantized / knn_cosine
-    (ties (score desc, neighbor_id asc) at both levels).
+    all-pairs answer (ties (score desc, neighbor_id asc) at both levels).
 
     At 1000 executors: raise n_blocks so n/B slabs fit executor memory;
     grid tasks = B^2 gives the parallelism knob. (QdrantRepository.cs:
     184-206's search role, minus the index approximation.)"""
     B = n_blocks
     vec = (
-        _quant(F.col("embedding")) if quantized else
+        _quant(F.col("embedding"), QUANT_SCALE) if quantized else
         F.col("embedding").cast("array<double>")
     )
     q = emb.select(F.col("vec_id").alias("vid"), vec.alias("qv"))
@@ -201,74 +158,26 @@ def _knn_blocked(
 def knn_exact_quantized_blocked(
     emb: DataFrame, k: int = 5, n_blocks: int = 8
 ) -> DataFrame:
-    """Distributed twin of knn_exact_quantized — identical rows (exact int64
-    arithmetic, same tie order), no collect()/broadcast in the plan."""
+    """Exact top-k by integer-quantized dot product (floor(x*1000)).
+    Output: (vec_id, neighbor_id, qdot, rank), ties by neighbor_id. The
+    int64 arithmetic is exact, so the rows equal the all-pairs SQL twin
+    (knn_exact_quantized_sql) bit for bit."""
     return _knn_blocked(emb, k, n_blocks, quantized=True)
 
 
 def knn_cosine_blocked(
     emb: DataFrame, k: int = 5, n_blocks: int = 8
 ) -> DataFrame:
-    """Distributed twin of knn_cosine — same neighbors/ranks, scores equal
-    within float tolerance: per-pair scores go through different BLAS
-    accumulation shapes (full-matrix vs per-block matmul), so ulp-level
-    drift is possible and near-tie pairs at the drift boundary could in
-    principle reorder (the quantized int64 variant is the one with an
-    exact-identity guarantee). No collect()/broadcast in the plan."""
+    """Exact float-cosine top-k. Output: (vec_id, neighbor_id, cosine,
+    rank), ties by neighbor_id. Scores come from per-block BLAS matmuls, so
+    they can drift at ulp level from any other accumulation order (a
+    full-matrix product, an ordered SQL fold), and near-tie pairs at the
+    drift boundary could in principle reorder (the quantized int64 variant
+    is the one with an exact-identity guarantee)."""
     return _knn_blocked(emb, k, n_blocks, quantized=False)
 
 
 DUP_QUANT_SCALE = 100  # coarser scale keeps the squared-dot filter in int64
-
-
-def embedding_dup_pairs(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — cosine(a, b) >= threshold
-    evaluated ENTIRELY in integer arithmetic so the DuckDB oracle matches
-    bit-for-bit: with q = floor(x*100), cos_q = qdot / sqrt(na*nb), the
-    predicate cos_q >= t becomes  qdot > 0  AND
-    qdot^2 * denom >= t_num^2 * na * nb  (t = t_num/denom rational).
-
-    Output: (vec_id_a < vec_id_b, qdot, na, nb) — all BIGINT.
-    """
-    t_num = int(round(threshold * 100))
-    q = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: F.floor(x * DUP_QUANT_SCALE).cast("long")).alias("qv"),
-    )
-    rows = q.collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["qv"] for r in rows], dtype=np.int64)
-    norms = (mat * mat).sum(axis=1)
-    spark = emb.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        M, I, N = b_mat.value, b_ids.value, b_norms.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            qn = (Q * Q).sum(axis=1)
-            D = Q @ M.T
-            qids = pdf["vec_id"].to_numpy()
-            res = []
-            for r, qid in enumerate(qids):
-                d = D[r]
-                # integer predicate: d>0 and d^2 * 100^2 >= t_num^2 * na*nb
-                # (use python ints to dodge any int64 overflow)
-                for j in np.nonzero((I > qid) & (d > 0))[0]:
-                    dj = int(d[j])
-                    if dj * dj * 10000 >= t_num * t_num * int(qn[r]) * int(N[j]):
-                        res.append((qid, int(I[j]), dj, int(qn[r]), int(N[j])))
-            yield pd.DataFrame(
-                res, columns=["vec_id_a", "vec_id_b", "qdot", "na", "nb"]
-            )
-
-    return q.mapInPandas(
-        compute, "vec_id_a long, vec_id_b long, qdot long, na long, nb long"
-    )
 
 
 def embedding_dup_pairs_sql(threshold: float = 0.9) -> str:
@@ -353,29 +262,23 @@ def embedding_dup_pairs_lsh(
     a pair at cos ~= threshold misses all 24 tables with p ~= 1e-3 — the
     equality is asserted against embedding_dup_pairs_sql on this corpus in
     tests and the driver gate, and should be re-validated per corpus.
-    Output matches embedding_dup_pairs: (vec_id_a < vec_id_b, qdot, na, nb)
-    all BIGINT.
+    Output: (vec_id_a < vec_id_b, qdot, na, nb), all BIGINT.
 
     Raises ValueError when the quantized norms could overflow the int64
-    verify predicate (qdot^2 * 10000) — lower DUP_QUANT_SCALE in that case
-    (the brute-force twin computes in unbounded Python ints and would
-    silently diverge instead).
+    verify predicate (qdot^2 * 10000) — lower DUP_QUANT_SCALE in that case.
     """
     t_num = int(round(threshold * 100))
-    qsq = F.aggregate(
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x * DUP_QUANT_SCALE).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x * x,
+    qv = _quant(F.col("embedding"), DUP_QUANT_SCALE)
+    sq_norm = lambda c: F.aggregate(  # noqa: E731
+        F.transform(c, lambda x: x * x), F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
     )
     # ONE setup scan: dim probe + overflow-guard max in the same job.
     # Cauchy-Schwarz: qdot <= sqrt(na*nb) <= max(na), so the verify
     # predicate's largest product is max_na^2 * 10000 (left side) vs
     # t_num^2 * max_na^2 (right) — guard both against int64.
     stats = emb.select(
-        F.max(qsq).alias("m"), F.max(F.size("embedding")).alias("d")
+        F.max(sq_norm(qv)).alias("m"), F.max(F.size("embedding")).alias("d")
     ).first()
     max_na, dim = stats["m"] or 0, stats["d"] or 0
     buckets = _hyperplane_buckets_udf(dim, n_tables, n_bits, seed)
@@ -387,9 +290,7 @@ def embedding_dup_pairs_lsh(
         )
     q = emb.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.floor(x * DUP_QUANT_SCALE).cast("long")
-        ).alias("qv"),
+        qv.alias("qv"),
         F.explode(buckets(F.col("embedding"))).alias("bucket"),
     )
     a = q.select(F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa"), "bucket")
@@ -401,10 +302,6 @@ def embedding_dup_pairs_lsh(
     )
     qdot = F.aggregate(
         F.zip_with("qa", "qb", lambda x, y: x * y), F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    sq_norm = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
     scored = cands.select(
@@ -457,47 +354,40 @@ def kmeans_centroids(
     return C
 
 
-def knn_cosine(emb: DataFrame, k: int = 5) -> DataFrame:
-    """Exact cosine top-k via numpy against a broadcast matrix (the
-    brute-force baseline; Arrow-batched, no per-row Python)."""
-    rows = emb.select("vec_id", "embedding").collect()  # right side: small by design
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    spark = emb.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
-
-    out_schema = "vec_id long, neighbor_id long, cosine double, rank int"
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        M, I, NR = b_mat.value, b_ids.value, b_norms.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            qn = np.linalg.norm(Q, axis=1)
-            qn[qn == 0] = 1.0
-            S = (Q @ M.T) / qn[:, None] / NR[None, :]
-            qids = pdf["vec_id"].to_numpy()
-            res = []
-            for r, qid in enumerate(qids):
-                # drop self BEFORE ranking (the r2 -inf-mask form emitted the
-                # query itself as the last neighbor when the corpus has <= k
-                # vectors, diverging from the blocked twin)
-                mask = I != qid
-                ii, ss = I[mask], S[r][mask]
-                # top-k with deterministic (score desc, id asc) ties
-                order = np.lexsort((ii, -ss))[:k]
-                for rank, j in enumerate(order, 1):
-                    res.append((qid, ii[j], ss[j], rank))
-            yield pd.DataFrame(
-                res, columns=["vec_id", "neighbor_id", "cosine", "rank"]
-            )
-
-    return emb.select("vec_id", "embedding").mapInPandas(compute, out_schema)
+def _cosine_topk(
+    queries: DataFrame, index: DataFrame, key: str, k: int
+) -> DataFrame:
+    """Exact cosine re-rank shared by ann_ivf and ann_lsh: the query rows
+    (vec_id, ea) meet the index rows (neighbor_id, eb) on ``key``; each
+    distinct non-self pair is scored and the top-k kept per vec_id, ties by
+    neighbor_id. Dot and norms are ordered left folds in double, so the
+    DuckDB twins (knn_cosine_fold_sql, ann_lsh_sql) replay every rounding."""
+    cands = (
+        queries.join(index, key)
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .dropDuplicates(["vec_id", "neighbor_id"])
+    )
+    dot = F.aggregate(
+        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    norm = lambda c: F.sqrt(  # noqa: E731
+        F.aggregate(
+            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+    scored = cands.withColumn(
+        "cosine", dot / (norm(F.col("ea")) * norm(F.col("eb")))
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("vec_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def ann_ivf(
@@ -548,32 +438,7 @@ def ann_ivf(
         F.col("embedding").alias("ea"),
         F.explode(cells_udf(n_probe)(F.col("embedding"))).alias("cell"),
     )
-    cands = (
-        probes.join(index, "cell")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .dropDuplicates(["vec_id", "neighbor_id"])
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    scored = cands.withColumn(
-        "cosine", dot / (norm(F.col("ea")) * norm(F.col("eb")))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(probes, index, "cell", k)
 
 
 def _fold_sum_sql(terms: str) -> str:
@@ -609,8 +474,8 @@ def ann_lsh_sql(
 
     The gate compares (vec_id, neighbor_id, rank); the raw cosine is
     bit-identical by construction but kept out of the hash for symmetry
-    with knn_cosine. ``dim`` must match the embeddings table (64 in the
-    driver testdata; the Spark query asserts it)."""
+    with the knn_cosine query. ``dim`` must match the embeddings table (64
+    in the driver testdata; the Spark query asserts it)."""
     H = hyperplanes(dim, n_tables, n_bits, seed)
     lits = ", ".join(f"{float(x):.17e}" for x in H.reshape(n_tables * n_bits * dim))
     dot_hp = _fold_sum_sql(
@@ -715,29 +580,4 @@ def ann_lsh(
     b = with_b.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb"), "bucket"
     )
-    cands = (
-        a.join(b, "bucket")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .dropDuplicates(["vec_id", "neighbor_id"])
-    )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    scored = cands.withColumn(
-        "cosine", dot / (norm(F.col("ea")) * norm(F.col("eb")))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_topk(a, b, "bucket", k)

@@ -97,7 +97,6 @@ class DedupConfig:
     # other but NOT to the anchor — a mixed mega-bucket shape that webtext
     # boilerplate does not produce (and the d+1 other bands still catch).
     star_only_cap: int = 20_000
-    top_k_neighbors: int | None = None   # QdrantRepository.cs:192 limit=100; None = unlimited (recall-safe)
 
     # join strategy: hint the small frames (winner urls, candidate url sets)
     # for broadcast semi-joins. Set False beyond ~10^9 docs per job — the

@@ -29,7 +29,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bands import banded_pairs
@@ -546,18 +546,6 @@ def incremental_minhash_pairs(
     return new_sigs, verify_pairs(cands, all_sigs, cfg)
 
 
-def top_k_per_probe(pairs: DataFrame, k: int) -> DataFrame:
-    """Optional per-probe result cap — the reference truncates every ANN
-    query at limit=100 (QdrantRepository.cs:192, J7). Recall-unsafe, so OFF
-    by default (SURVEY.md §2.9 delta 4); exposed for parity."""
-    w = Window.partitionBy("url_a").orderBy(F.desc("score"), F.asc("url_b"))
-    return (
-        pairs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
 def minhash_pairs(
     reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
@@ -595,7 +583,4 @@ def minhash_pairs(
         # the url prune first (no concurrent reference), filling this cache
         # en route.
         registry.append(cands.persist())
-    confirmed = verify_pairs(cands, reps, cfg, registry=registry)
-    if cfg.top_k_neighbors is not None:
-        confirmed = top_k_per_probe(confirmed, cfg.top_k_neighbors)
-    return confirmed
+    return verify_pairs(cands, reps, cfg, registry=registry)
