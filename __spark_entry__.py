@@ -766,9 +766,10 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard driver signal on the §2.8 exactly-once incremental machinery
     (r3 VERDICT #8): sf0.01 is split into 3 deterministic batches
     (xxhash64(url) mod 3) and fed through the REAL foreachBatch handler
-    (streaming.process_batch_neardup — parquet state partitions, batch_id <
-    N state reads), then batch 1 is REPLAYED to exercise the overwrite
-    idempotence the streaming checkpoint-recovery path relies on. The
+    (streaming.process_batch_pairs with method "minhash" — parquet state
+    partitions, batch_id < N state reads), then batch 1 is REPLAYED to
+    exercise the overwrite idempotence the streaming checkpoint-recovery
+    path relies on. The
     accumulated pair log must equal the one-shot batch result, so the
     oracle is the same brute-force exact-Jaccard twin as minhash_lsh_pairs
     (each pair is discovered exactly once — when its later member's batch
@@ -776,7 +777,7 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from europa_spark.streaming import process_batch_neardup, read_neardup_pairs
+    from europa_spark.streaming import process_batch_pairs, read_pairs
 
     docs = load_canonical(spark, sf_dir)
     # GATE-ONLY state location: a throwaway driver-local tempdir, torn down
@@ -784,19 +785,21 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resumes. The PRODUCTION layout is a durable shared checkpoint root
     # (HDFS/S3) holding these same parquet state partitions next to the
     # Structured Streaming checkpointLocation — see streaming.py's
-    # start_incremental_neardup and RUNBOOK.md's resume story; do NOT
-    # copy this tempfile pattern into a cluster job (r4 VERDICT #4).
+    # start_incremental_pairs (one handler; _PAIR_STATE maps each method to
+    # its state dirs) and RUNBOOK.md's resume story; do NOT copy this
+    # tempfile pattern into a cluster job (r4 VERDICT #4).
     state_dir = tempfile.mkdtemp(prefix="europa_inc_gate_")
     try:
         for bid in range(3):
             batch = docs.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == bid)
-            process_batch_neardup(batch, bid, state_dir)
+            process_batch_pairs(batch, bid, state_dir, "minhash")
         # replay batch 1: exactly-once means the final log is unchanged
-        process_batch_neardup(
-            docs.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 1), 1, state_dir
+        process_batch_pairs(
+            docs.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 1), 1,
+            state_dir, "minhash",
         )
         return (
-            read_neardup_pairs(spark, state_dir)
+            read_pairs(spark, state_dir, "minhash")
             .select("url_a", "url_b", F.col("score").alias("jaccard"))
             .localCheckpoint(eager=True)
         )

@@ -56,21 +56,6 @@ class DedupConfig:
     winnow_window: int = 128
     substring_votes: int = 3             # shared fingerprints to call a pair
 
-    # verify pre-filter: skip exact-Jaccard verification for candidate pairs
-    # whose MinHash-estimated Jaccard (fraction of equal signature
-    # components — the signatures are already materialized and ~5x narrower
-    # than the shingle arrays) is below jaccard_threshold - this margin.
-    # The estimator is Bin(num_perm, J)/num_perm: at J = 0.8, num_perm = 128,
-    # margin 0.15 the per-pair false-drop probability is
-    # P(Bin(128,.8) < .65*128) ~ 1e-5 — far inside the 0.99 recall gate.
-    # Default OFF: measured at 200k bench rows, LSH candidate precision is
-    # 100% (15,985/15,985 candidates verify at J >= 0.8 — b=16 r=8 banding
-    # at tau 0.8 admits essentially no sub-threshold collisions), so the
-    # estimate join is pure overhead there. Turn it on for corpora whose
-    # similarity mass sits just under the threshold (heavy boilerplate with
-    # J in [0.5, 0.8)), where candidates outnumber true pairs.
-    verify_est_margin: float | None = None
-
     # skew handling (north rule: explicit salting of hot LSH buckets)
     bucket_cap: int = 2000               # max rows per (band_idx, band_hash) bucket
     # size of the salted sub-buckets that hot-bucket members all-pair
@@ -130,12 +115,6 @@ class DedupConfig:
             raise ValueError("star_only_cap must be >= bucket_cap")
         if self.salt_sub_cap < 2:
             raise ValueError("salt_sub_cap must be >= 2")
-        if self.verify_est_margin is not None and not (
-            0.0 <= self.verify_est_margin < self.jaccard_threshold
-        ):
-            raise ValueError(
-                "verify_est_margin must be in [0, jaccard_threshold) or None"
-            )
         if self.simhash_token_hash not in ("blake2b", "fnv1a"):
             raise ValueError("simhash_token_hash must be 'blake2b' or 'fnv1a'")
 

@@ -34,8 +34,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .exact import content_hash_col
+from .config import CANONICAL
+from .exact import content_hash_col, representatives, with_content_hash
 from .extract import split_quarantine, with_extracted
+from .minhash import incremental_minhash_pairs
+from .simhash import incremental_simhash_pairs
+from .substring import incremental_substring_pairs
 
 DOC_SCHEMA = StructType(
     [
@@ -73,12 +77,46 @@ def _read_state(
     """Per-batch state visible to ``before_batch``: only partitions
     committed by EARLIER batches — a replayed batch never sees its own prior
     output. A missing dir is the first batch's empty state; read failures
-    on an EXISTING dir (corruption, IO errors) propagate."""
+    on an EXISTING dir (corruption, IO errors) propagate.
+
+    Raises ValueError on a dir that lacks a column of ``schema`` (state
+    written in an older layout, e.g. near-dup ``sigs/`` as (url, shingles,
+    minhash)): reading it as an empty index would re-pair history that the
+    pair log already holds."""
     if not _state_path_exists(spark, path):
         return spark.createDataFrame([], schema)
     df = spark.read.parquet(path)
     cols = [c.strip().split(" ")[0] for c in schema.split(",")]
+    if not set(cols) <= set(df.columns):
+        raise ValueError(
+            f"{path} holds state in an old layout, with columns {df.columns}; "
+            f"the expected layout is ({schema}). Start a new state_dir: the "
+            "old one cannot be resumed."
+        )
     return df.filter(F.col("batch_id") < before_batch).select(*cols)
+
+
+def _read_log(spark: SparkSession, path: str) -> DataFrame:
+    """A per-batch log with batch_id restored from the partition dir names."""
+    return spark.read.parquet(path).withColumn(
+        "batch_id", F.col("batch_id").cast("long")
+    )
+
+
+def _start(spark: SparkSession, source_dir: str, handler, checkpoint_dir: str):
+    """availableNow streaming query over a documents directory: processes
+    all files currently in source_dir through ``handler(batch_df, batch_id)``,
+    then stops — call again after new files land (or switch the trigger for
+    continuous mode). Spark creates the checkpoint and state dirs through
+    the Hadoop FS, so a URI state_dir works as is. Returns the
+    StreamingQuery."""
+    return (
+        spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
+        .writeStream.foreachBatch(handler)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def process_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
@@ -132,285 +170,105 @@ def start_incremental_dedup(
     state_dir: str,
     checkpoint_dir: str | None = None,
 ):
-    """availableNow streaming query: processes all files currently in
-    source_dir, then stops — call again after new files land (or switch the
-    trigger for continuous mode). Returns the StreamingQuery."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_batch(df, bid, state_dir)
-        )
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_stream_ckpt"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    """availableNow streaming exact-dedup query (see ``_start``)."""
+    return _start(
+        spark, source_dir,
+        lambda df, bid: process_batch(df, bid, state_dir),
+        checkpoint_dir or os.path.join(state_dir, "_stream_ckpt"),
     )
 
 
 def read_dup_log(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(url, duplicate_of, content_hash, batch_id) — batch_id is restored
-    from the partition directory names."""
-    return spark.read.parquet(_dup_log_path(state_dir)).withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
+    """(url, duplicate_of, content_hash, batch_id)."""
+    return _read_log(spark, _dup_log_path(state_dir))
 
 
 # ---------------------------------------------------------------------------
-# Streaming NEAR-duplicate dedup: the MinHash/LSH path under foreachBatch.
-# Each micro-batch signatures its new docs once, probes the accumulated band
-# index (incremental_minhash_pairs: delta probes x full index, J4/J5 resume
-# semantics), and appends its (url, extracted, minhash) state + confirmed
-# pairs to per-batch partitions with the same exactly-once replay scheme as
-# the exact path. The state keeps the text, not shingle arrays: the exact
-# verify rehashes it like the batch path does.
+# Streaming pair dedup: the minhash, substring and simhash paths under
+# foreachBatch, one handler for all three. Each micro-batch signatures its
+# new docs once, probes the accumulated signature index with the method's
+# incremental_*_pairs (delta probes x full index, minus pairs already
+# confirmed: J4/J5 resume semantics), and appends its signature state and
+# confirmed pairs to per-batch partitions with the same exactly-once replay
+# scheme as the exact path. Near-dup state keeps the text, not shingle
+# arrays: the exact verify rehashes it like the batch path does.
 # ---------------------------------------------------------------------------
 
+_PAIRS_SCHEMA = "url_a string, url_b string, score double"
 
-def _sigs_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "sigs")
+# method -> (signature-state dir, its schema, pair-state dir,
+#            stream-checkpoint dir, incremental pair function)
+_PAIR_STATE = {
+    "minhash": (
+        "sigs", "url string, extracted string, minhash array<bigint>",
+        "pairs", "_stream_ckpt_nd", incremental_minhash_pairs,
+    ),
+    "substring": (
+        "fps", "uid bigint, url string, fps array<bigint>",
+        "sub_pairs", "_stream_ckpt_sub", incremental_substring_pairs,
+    ),
+    "simhash": (
+        "sh_sigs", "url string, simhash bigint",
+        "sh_pairs", "_stream_ckpt_sh", incremental_simhash_pairs,
+    ),
+}
 
 
-def _pairs_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "pairs")
+def _pair_state(method: str) -> tuple:
+    if method not in _PAIR_STATE:
+        raise ValueError(
+            f"no streaming pair state for method {method!r}; "
+            f"known: {sorted(_PAIR_STATE)}"
+        )
+    return _PAIR_STATE[method]
 
 
-def process_batch_neardup(
-    batch_df: DataFrame, batch_id: int, state_dir: str, cfg=None
+def process_batch_pairs(
+    batch_df: DataFrame, batch_id: int, state_dir: str, method: str, cfg=None
 ) -> None:
-    """One micro-batch of incremental MinHash/LSH dedup. Deterministic given
-    (batch rows, state with batch_id < batch_id), so checkpoint-recovery
-    replays rewrite identical partitions.
-
-    Raises ValueError on a ``sigs/`` dir in the old (url, shingles, minhash)
-    layout: reading it as an empty index would re-pair history that
-    ``pairs/`` already holds."""
-    from .config import CANONICAL
-    from .exact import representatives, with_content_hash
-    from .minhash import incremental_minhash_pairs
-
+    """One micro-batch of incremental ``method`` pair dedup. Deterministic
+    given (batch rows, state with batch_id < batch_id), so checkpoint-
+    recovery replays rewrite identical partitions."""
+    sigs_dir, sigs_schema, pairs_dir, _, incremental = _pair_state(method)
     cfg = cfg or CANONICAL
     spark = batch_df.sparkSession
     clean, _ = split_quarantine(with_extracted(batch_df))
     new_reps = representatives(with_content_hash(clean, cfg), cfg).select(
         "url", "extracted"
     )
-
-    sigs_path = _sigs_path(state_dir)
-    if _state_path_exists(spark, sigs_path):
-        cols = spark.read.parquet(sigs_path).columns
-        if "shingles" in cols and "extracted" not in cols:
-            raise ValueError(
-                f"{sigs_path} holds near-dup state in the old (url, shingles, "
-                "minhash) layout; sigs/ is now (url, extracted, minhash). "
-                "Start a new state_dir: the old one cannot be resumed."
-            )
-    existing_sigs = _read_state(
-        spark, sigs_path,
-        "url string, extracted string, minhash array<bigint>", batch_id,
-    )
-    existing_pairs = _read_state(
-        spark, _pairs_path(state_dir),
-        "url_a string, url_b string, score double", batch_id,
-    )
-    new_sigs, new_pairs = incremental_minhash_pairs(
+    sigs_path = os.path.join(state_dir, sigs_dir)
+    pairs_path = os.path.join(state_dir, pairs_dir)
+    existing_sigs = _read_state(spark, sigs_path, sigs_schema, batch_id)
+    existing_pairs = _read_state(spark, pairs_path, _PAIRS_SCHEMA, batch_id)
+    new_sigs, new_pairs = incremental(
         existing_sigs, new_reps, cfg, existing_pairs=existing_pairs
     )
-    new_sigs.write.mode("overwrite").parquet(
+    new_sigs.select(*existing_sigs.columns).write.mode("overwrite").parquet(
         os.path.join(sigs_path, f"batch_id={batch_id}")
     )
     new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
-        os.path.join(_pairs_path(state_dir), f"batch_id={batch_id}")
+        os.path.join(pairs_path, f"batch_id={batch_id}")
     )
 
 
-def start_incremental_neardup(
+def start_incremental_pairs(
     spark: SparkSession,
     source_dir: str,
     state_dir: str,
+    method: str,
     checkpoint_dir: str | None = None,
     cfg=None,
 ):
-    """availableNow streaming near-dup query over a documents directory —
-    the continuous-ingestion analog of the batch pipeline's minhash path."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_batch_neardup(df, bid, state_dir, cfg)
-        )
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_stream_ckpt_nd"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    """availableNow streaming ``method`` pair query (see ``_start``) — the
+    continuous-ingestion analog of the batch pipeline's pair stage."""
+    ckpt_dir = _pair_state(method)[3]
+    return _start(
+        spark, source_dir,
+        lambda df, bid: process_batch_pairs(df, bid, state_dir, method, cfg),
+        checkpoint_dir or os.path.join(state_dir, ckpt_dir),
     )
 
 
-def read_neardup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
+def read_pairs(spark: SparkSession, state_dir: str, method: str) -> DataFrame:
     """(url_a, url_b, score, batch_id) accumulated across batches."""
-    return spark.read.parquet(_pairs_path(state_dir)).withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming SUBSTRING dedup: the winnowing path under foreachBatch — same
-# exactly-once per-batch-partition scheme; fingerprints accumulate as the
-# index, each batch's new docs probe it (substring.incremental_substring_pairs).
-# Completes §2.8 coverage across all three dedup methods (exact, minhash,
-# substring).
-# ---------------------------------------------------------------------------
-
-
-def _fps_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "fps")
-
-
-def _sub_pairs_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "sub_pairs")
-
-
-def process_batch_substring(
-    batch_df: DataFrame, batch_id: int, state_dir: str, cfg=None
-) -> None:
-    """One micro-batch of incremental winnowing dedup. Deterministic given
-    (batch rows, state with batch_id < batch_id) — replays rewrite
-    identical partitions."""
-    from .config import CANONICAL
-    from .exact import representatives, with_content_hash
-    from .substring import incremental_substring_pairs
-
-    cfg = cfg or CANONICAL
-    spark = batch_df.sparkSession
-    clean, _ = split_quarantine(with_extracted(batch_df))
-    new_reps = representatives(with_content_hash(clean, cfg), cfg).select(
-        "url", "extracted"
-    )
-    existing_fps = _read_state(
-        spark, _fps_path(state_dir),
-        "uid bigint, url string, fps array<bigint>", batch_id,
-    )
-    existing_pairs = _read_state(
-        spark, _sub_pairs_path(state_dir),
-        "url_a string, url_b string, score double", batch_id,
-    )
-    new_fps, new_pairs = incremental_substring_pairs(
-        existing_fps, new_reps, cfg, existing_pairs=existing_pairs
-    )
-    new_fps.select("uid", "url", "fps").write.mode("overwrite").parquet(
-        os.path.join(_fps_path(state_dir), f"batch_id={batch_id}")
-    )
-    new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
-        os.path.join(_sub_pairs_path(state_dir), f"batch_id={batch_id}")
-    )
-
-
-def start_incremental_substring(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str | None = None,
-    cfg=None,
-):
-    """availableNow streaming substring-dup query over a documents dir."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_batch_substring(df, bid, state_dir, cfg)
-        )
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_stream_ckpt_sub"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_substring_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(url_a, url_b, score, batch_id) accumulated across batches."""
-    return spark.read.parquet(_sub_pairs_path(state_dir)).withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming SIMHASH dedup — the fourth and last method under foreachBatch;
-# single-long signatures make this the cheapest incremental state.
-# ---------------------------------------------------------------------------
-
-
-def _sh_sigs_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "sh_sigs")
-
-
-def _sh_pairs_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "sh_pairs")
-
-
-def process_batch_simhash(
-    batch_df: DataFrame, batch_id: int, state_dir: str, cfg=None
-) -> None:
-    """One micro-batch of incremental SimHash dedup (same exactly-once
-    per-batch-partition scheme as the other three methods)."""
-    from .config import CANONICAL
-    from .exact import representatives, with_content_hash
-    from .simhash import incremental_simhash_pairs
-
-    cfg = cfg or CANONICAL
-    spark = batch_df.sparkSession
-    clean, _ = split_quarantine(with_extracted(batch_df))
-    new_reps = representatives(with_content_hash(clean, cfg), cfg).select(
-        "url", "extracted"
-    )
-    existing_sigs = _read_state(
-        spark, _sh_sigs_path(state_dir), "url string, simhash bigint", batch_id
-    )
-    existing_pairs = _read_state(
-        spark, _sh_pairs_path(state_dir),
-        "url_a string, url_b string, score double", batch_id,
-    )
-    new_sigs, new_pairs = incremental_simhash_pairs(
-        existing_sigs, new_reps, cfg, existing_pairs=existing_pairs
-    )
-    new_sigs.select("url", "simhash").write.mode("overwrite").parquet(
-        os.path.join(_sh_sigs_path(state_dir), f"batch_id={batch_id}")
-    )
-    new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
-        os.path.join(_sh_pairs_path(state_dir), f"batch_id={batch_id}")
-    )
-
-
-def start_incremental_simhash(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    checkpoint_dir: str | None = None,
-    cfg=None,
-):
-    """availableNow streaming SimHash-dup query over a documents dir."""
-    os.makedirs(state_dir, exist_ok=True)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(source_dir)
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: process_batch_simhash(df, bid, state_dir, cfg)
-        )
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_stream_ckpt_sh"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_simhash_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(url_a, url_b, score, batch_id) accumulated across batches."""
-    return spark.read.parquet(_sh_pairs_path(state_dir)).withColumn(
-        "batch_id", F.col("batch_id").cast("long")
-    )
+    return _read_log(spark, os.path.join(state_dir, _pair_state(method)[2]))

@@ -188,8 +188,7 @@ def test_verify_strategy_and_margin_equivalence(spark, reps, sigs):
     """The rehash verify must score every confirmed pair exactly as a
     driver-side |A∩B|/|A∪B| over Python sets of the same shingle hashes,
     and confirm exactly the candidates that reference puts at or above the
-    threshold, no more and no fewer; the est_prefilter margin must drop nothing at the
-    canonical config (P(false drop) ~ 1e-5 per true pair)."""
+    threshold, no more and no fewer."""
     base = {
         (r["url_a"], r["url_b"], r["score"])
         for r in minhash_pairs(reps).collect()
@@ -206,12 +205,6 @@ def test_verify_strategy_and_margin_equivalence(spark, reps, sigs):
     expected = {p for p in cands if ref[p] >= cfg.jaccard_threshold}
     got = {(a, b) for a, b, _ in base}
     assert got == expected, (sorted(expected - got)[:5], sorted(got - expected)[:5])
-    margin_cfg = DedupConfig(verify_est_margin=0.15)
-    got_margin = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in minhash_pairs(reps, margin_cfg).collect()
-    }
-    assert got_margin == base
 
 
 def test_mega_bucket_star_only(spark):

@@ -22,13 +22,14 @@ from europa_spark.multimodal import (
     phash64,
     with_media_metadata,
 )
+from europa_spark.pipeline import METHODS
 from europa_spark.streaming import (
     process_batch,
-    process_batch_neardup,
+    process_batch_pairs,
     read_dup_log,
-    read_neardup_pairs,
+    read_pairs,
     start_incremental_dedup,
-    start_incremental_neardup,
+    start_incremental_pairs,
 )
 
 
@@ -65,46 +66,6 @@ def test_incremental_stream_dedup(spark, tmp_path):
 
     log2 = {(r["url"], r["duplicate_of"]) for r in read_dup_log(spark, state).collect()}
     assert log2 == {("u2", "u1"), ("u4", "u1")}, log2
-
-
-def test_incremental_stream_substring(spark, tmp_path):
-    """Streaming winnowing dedup: a verbatim block shared across batches is
-    found when the second batch probes the accumulated fingerprint index;
-    replay rewrites identical partitions (exactly-once)."""
-    from europa_spark.streaming import (
-        process_batch_substring,
-        read_substring_pairs,
-        start_incremental_substring,
-    )
-
-    src = tmp_path / "subsrc"
-    state = str(tmp_path / "substate")
-    os.makedirs(src)
-    block = " ".join(f"copied{i}" for i in range(100))  # ~780 chars shared
-    doc_a = "unique lead-in alpha " + block + " unique tail one"
-    doc_b = "totally different start " + block + " and another ending"
-    far = " ".join(f"noise{i}" for i in range(120))
-
-    _write_docs(str(src / "b1.parquet"), [("s1", doc_a), ("s2", far)])
-    q = start_incremental_substring(spark, str(src), state)
-    q.awaitTermination(120)
-    p1 = {(r["url_a"], r["url_b"]) for r in read_substring_pairs(spark, state).collect()}
-    assert p1 == set()
-
-    _write_docs(str(src / "b2.parquet"), [("s3", doc_b)])
-    q = start_incremental_substring(spark, str(src), state)
-    q.awaitTermination(120)
-    p2 = {(r["url_a"], r["url_b"]) for r in read_substring_pairs(spark, state).collect()}
-    assert p2 == {("s1", "s3")}, p2
-
-    # replay of batch 1 (recovery): identical rows, no new pairs
-    b1 = spark.createDataFrame(
-        [("s3", None, None, doc_b, "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    process_batch_substring(b1, 1, state)
-    p3 = {(r["url_a"], r["url_b"]) for r in read_substring_pairs(spark, state).collect()}
-    assert p3 == p2
 
 
 def test_incremental_substring_matches_batch(spark):
@@ -145,62 +106,6 @@ def test_incremental_substring_matches_batch(spark):
     assert inc == batch and batch, (inc, batch)
 
 
-def test_incremental_stream_simhash(spark, tmp_path):
-    """Streaming SimHash dedup: a bit-level near-dup arriving in batch 2
-    pairs against batch 1's accumulated signatures; replay is idempotent;
-    incremental result equals the batch simhash_pairs over the union."""
-    from europa_spark.extract import split_quarantine, with_extracted
-    from europa_spark.simhash import simhash_pairs
-    from europa_spark.streaming import (
-        process_batch_simhash,
-        read_simhash_pairs,
-        start_incremental_simhash,
-    )
-
-    src = tmp_path / "shsrc"
-    state = str(tmp_path / "shstate")
-    os.makedirs(src)
-    base, variant, unrelated = _near_dup_texts()
-
-    _write_docs(str(src / "b1.parquet"), [("h1", base), ("h2", unrelated)])
-    q = start_incremental_simhash(spark, str(src), state)
-    q.awaitTermination(120)
-    p1 = {(r["url_a"], r["url_b"]) for r in read_simhash_pairs(spark, state).collect()}
-    assert p1 == set()
-
-    _write_docs(str(src / "b2.parquet"), [("h3", variant)])
-    q = start_incremental_simhash(spark, str(src), state)
-    q.awaitTermination(120)
-    got = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in read_simhash_pairs(spark, state).collect()
-    }
-    # equivalence with the one-shot batch path over the union
-    union = spark.createDataFrame(
-        [("h1", None, None, base, "en"), ("h2", None, None, unrelated, "en"),
-         ("h3", None, None, variant, "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    clean, _ = split_quarantine(with_extracted(union))
-    batch = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in simhash_pairs(clean.select("url", "extracted")).collect()
-    }
-    assert got == batch, (got, batch)
-
-    # replay of batch 1 (recovery): identical accumulated rows
-    b1 = spark.createDataFrame(
-        [("h3", None, None, variant, "en")],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    process_batch_simhash(b1, 1, state)
-    again = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in read_simhash_pairs(spark, state).collect()
-    }
-    assert again == got
-
-
 def test_corrupted_state_raises_not_restarts(spark, tmp_path):
     """A corrupted (existing but unreadable) state dir must RAISE, not be
     silently treated as 'first batch, empty state' — the r2 design swallowed
@@ -231,52 +136,134 @@ def _near_dup_texts():
     return base, variant, unrelated
 
 
-def test_incremental_stream_neardup(spark, tmp_path):
-    """Streaming MinHash/LSH dedup: batch-2 probes join the accumulated band
-    index; replay rewrites identical partitions (exactly-once)."""
-    src = tmp_path / "ndsrc"
-    state = str(tmp_path / "ndstate")
-    os.makedirs(src)
+def _stream_texts(method: str) -> tuple[str, str, str]:
+    """(base, variant, unrelated): variant pairs with base under ``method``,
+    unrelated pairs with neither."""
     base, variant, unrelated = _near_dup_texts()
+    if method == "simhash":
+        # the mid-text change flips 5 of 64 bits (> simhash_hamming_d = 3);
+        # changing the last token flips 1
+        variant = base.rsplit(" ", 1)[0] + " CHANGED"
+    elif method == "substring":
+        block = " ".join(f"copied{i}" for i in range(100))  # ~780 chars shared
+        base = "unique lead-in alpha " + block + " unique tail one"
+        variant = "totally different start " + block + " and another ending"
+        unrelated = " ".join(f"noise{i}" for i in range(120))
+    return base, variant, unrelated
 
-    _write_docs(str(src / "b1.parquet"), [("n1", base), ("n2", unrelated)])
-    q = start_incremental_neardup(spark, str(src), state)
-    q.awaitTermination(120)
-    p1 = {(r["url_a"], r["url_b"]) for r in read_neardup_pairs(spark, state).collect()}
-    assert p1 == set()  # base vs unrelated: below threshold
 
-    _write_docs(str(src / "b2.parquet"), [("n3", variant)])
-    q = start_incremental_neardup(spark, str(src), state)
-    q.awaitTermination(120)
-    p2 = {(r["url_a"], r["url_b"]) for r in read_neardup_pairs(spark, state).collect()}
-    assert p2 == {("n1", "n3")}, p2
+def _pair_rows(spark, state: str, method: str) -> set:
+    return {
+        (r["url_a"], r["url_b"], r["score"])
+        for r in read_pairs(spark, state, method).collect()
+    }
+
+
+@pytest.mark.parametrize("method", [m for m in METHODS if m != "exact"])
+def test_incremental_stream_pairs(spark, tmp_path, method):
+    """Streaming pair dedup for every text method: batch 1 yields no pair,
+    batch 2's doc probes the index accumulated from batch 1 and pairs with
+    its planted twin, and a replay of batch 1 (checkpoint recovery)
+    rewrites identical partitions (exactly-once)."""
+    src = tmp_path / "src"
+    state = str(tmp_path / "state")
+    os.makedirs(src)
+    base, variant, unrelated = _stream_texts(method)
+
+    _write_docs(str(src / "b1.parquet"), [("d1", base), ("d2", unrelated)])
+    start_incremental_pairs(spark, str(src), state, method).awaitTermination(120)
+    assert _pair_rows(spark, state, method) == set()
+
+    _write_docs(str(src / "b2.parquet"), [("d3", variant)])
+    start_incremental_pairs(spark, str(src), state, method).awaitTermination(120)
+    got = _pair_rows(spark, state, method)
+    assert {(a, b) for a, b, _ in got} == {("d1", "d3")}, got
+
+    if method == "simhash":
+        # equivalence with the one-shot batch path over the union
+        from europa_spark.extract import split_quarantine, with_extracted
+        from europa_spark.simhash import simhash_pairs
+
+        union = spark.createDataFrame(
+            [("d1", None, None, base, "en"), ("d2", None, None, unrelated, "en"),
+             ("d3", None, None, variant, "en")],
+            "url string, warc_ts timestamp, html binary, text string, lang string",
+        )
+        clean, _ = split_quarantine(with_extracted(union))
+        batch = {
+            (r["url_a"], r["url_b"], r["score"])
+            for r in simhash_pairs(clean.select("url", "extracted")).collect()
+        }
+        assert got == batch, (got, batch)
 
     # replay of batch 1 (recovery semantics): identical rows, no dup pairs
     b1 = spark.createDataFrame(
-        [("n3", None, None, variant, "en")],
+        [("d3", None, None, variant, "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    process_batch_neardup(b1, 1, state)
-    p3 = {(r["url_a"], r["url_b"]) for r in read_neardup_pairs(spark, state).collect()}
-    assert p3 == p2
+    process_batch_pairs(b1, 1, state, method)
+    assert _pair_rows(spark, state, method) == got
 
 
-def test_neardup_rejects_old_state_layout(spark, tmp_path):
-    """A sigs/ dir written in the old (url, shingles, minhash) layout must
-    fail with an error that names the layout change, never read as an empty
-    index while pairs/ holds history."""
+def test_stream_pairs_rejects_unknown_method(spark, tmp_path):
+    """A method with no streaming pair state fails before any dir is made."""
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match="no streaming pair state.*'exact'"):
+        start_incremental_pairs(spark, str(tmp_path), state, "exact")
+    with pytest.raises(ValueError, match="known: \\['minhash'"):
+        read_pairs(spark, state, "nope")
+    assert not os.path.exists(state)
+
+
+@pytest.mark.parametrize(
+    "method, sigs_dir, rows, schema, match",
+    [
+        ("minhash", "sigs", [("n1", [1, 2, 3], list(range(128)))],
+         "url string, shingles array<bigint>, minhash array<bigint>",
+         "old .*shingles.* layout"),
+        ("substring", "fps", [("n1", [1, 2, 3])],
+         "url string, fps array<bigint>",
+         "old layout.*uid bigint, url string, fps"),
+        ("simhash", "sh_sigs", [("n1", 7)],
+         "url string, sig bigint",
+         "old .*sig.* layout.*simhash bigint"),
+    ],
+    ids=["minhash", "substring", "simhash"],
+)
+def test_stream_pairs_reject_old_state_layout(
+    spark, tmp_path, method, sigs_dir, rows, schema, match
+):
+    """A signature dir written in another layout (the old near-dup sigs/
+    held (url, shingles, minhash)) must fail with an error that names the
+    layout, never read as an empty index while the pair log holds
+    history."""
     state = str(tmp_path / "oldstate")
-    spark.createDataFrame(
-        [("n1", [1, 2, 3], list(range(128)))],
-        "url string, shingles array<bigint>, minhash array<bigint>",
-    ).write.parquet(os.path.join(state, "sigs", "batch_id=0"))
+    spark.createDataFrame(rows, schema).write.parquet(
+        os.path.join(state, sigs_dir, "batch_id=0")
+    )
     base, _, _ = _near_dup_texts()
     batch = spark.createDataFrame(
         [("n2", None, None, base, "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    with pytest.raises(ValueError, match="old .*shingles.* layout"):
-        process_batch_neardup(batch, 1, state)
+    with pytest.raises(ValueError, match=match):
+        process_batch_pairs(batch, 1, state, method)
+
+
+def test_stream_uri_state_dir_leaves_no_local_tree(spark, tmp_path, monkeypatch):
+    """A URI state_dir is written through the Hadoop FS only: starting a
+    stream leaves no ./file: tree in the cwd."""
+    src = tmp_path / "src"
+    cwd = tmp_path / "cwd"
+    os.makedirs(src)
+    os.makedirs(cwd)
+    _write_docs(str(src / "b1.parquet"), [("u1", "alpha beta"), ("u2", "alpha beta")])
+    state = (tmp_path / "state").as_uri()
+    monkeypatch.chdir(cwd)
+    start_incremental_dedup(spark, str(src), state).awaitTermination(120)
+    assert not (cwd / "file:").exists()
+    log = {(r["url"], r["duplicate_of"]) for r in read_dup_log(spark, state).collect()}
+    assert log == {("u2", "u1")}
 
 
 def test_media_metadata_and_signatures(spark):
