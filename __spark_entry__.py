@@ -39,6 +39,7 @@ from europa_spark.quality import (
     quality_features,
     quality_features_sql,
 )
+from europa_spark.scope import Scope
 from europa_spark.simhash import simhash_pairs
 from europa_spark.substring import WINNOW_MAX_DF, substring_pairs
 
@@ -60,12 +61,7 @@ def _clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full dedup pipeline report on sf0.001 (every clean doc with
     its cluster id and keep/duplicate decision)."""
-    docs = load_canonical(spark, "/root/testdata/sf0.001")
-    out = run(docs)
-    try:
-        return out["report"].localCheckpoint(eager=True)
-    finally:
-        out["release"]()
+    return _q_dedup_report(spark, "/root/testdata/sf0.001")
 
 
 # ---------------------------------------------------------------------------
@@ -204,41 +200,22 @@ def _q_unigram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _drained(build) -> DataFrame:
-    """Run a pair query with a local persist registry, materialize the
-    (small) result via an eager localCheckpoint, then unpersist every
-    intermediate frame — standalone gated queries otherwise leak storage
-    blocks for the session's lifetime (r2 ADVICE: minhash.py persist with
-    registry=None). The one surviving checkpoint block is reclaimed by
-    Spark's ContextCleaner once the result is dropped."""
-    reg: list[DataFrame] = []
-    try:
-        return build(reg).localCheckpoint(eager=True)
-    finally:
-        # also on failure — a query dying mid-materialization must not leave
-        # its persisted intermediates in the block store
-        for f in reg:
-            f.unpersist()
+# Pair queries build inside one ``with Scope(spark)`` and return an eager
+# localCheckpoint of their (small) result, materialized before the scope
+# frees every intermediate, also on failure: a standalone gated query must
+# not leak storage blocks for the session's lifetime (r2 ADVICE). Spark's
+# ContextCleaner reclaims the result block once the result is dropped.
 
 
-class _CkptBlocks:
-    """Registry shim giving a localCheckpoint's tracked blocks the same
-    .unpersist() contract _drained expects from persisted frames."""
-
-    def __init__(self, spark: SparkSession, ids: set) -> None:
-        self._spark, self._ids = spark, ids
-
-    def unpersist(self) -> None:
-        from europa_spark.cluster import _unpersist_ids
-
-        _unpersist_ids(self._spark, self._ids)
-
-
-def _reps_for_kernels(clean: DataFrame, reg: list) -> DataFrame:
+def _reps_for_kernels(clean: DataFrame, scope: Scope) -> DataFrame:
     """Representatives prepared for the signature kernels: winner collapse,
     narrow (url, extracted) projection, then a non-eager lineage truncation
-    so the scan+hash+winner subtree runs once and every downstream
-    reference plans against a leaf.
+    (``scope.checkpoint``) so the scan+hash+winner subtree runs once and
+    every downstream reference plans against a leaf. Without it that
+    subtree repeats through the signature cache into EVERY band/verify
+    branch of the final plan: ~12k formatted-plan lines whose
+    analysis/cache-matching the driver re-pays per action (measured 4.08 ->
+    3.21 s on minhash_lsh_pairs).
 
     The kernels run on the reps' own partitions (one per scan split), the
     same as pipeline.run's signature stage: a round-robin out to every core
@@ -246,26 +223,9 @@ def _reps_for_kernels(clean: DataFrame, reg: list) -> DataFrame:
     (minhash 3.42 vs 2.59 s, simhash 2.29 vs 1.91, substring 1.51 vs
     1.11), since each extra task forks and warms its own Python worker and
     ripples per-task overhead into every downstream verify/band stage."""
-    return _truncated(
-        representatives(with_content_hash(clean)).select("url", "extracted"),
-        reg,
+    return scope.checkpoint(
+        representatives(with_content_hash(clean)).select("url", "extracted")
     )
-
-
-def _truncated(df: DataFrame, reg: list) -> DataFrame:
-    """Non-eager localCheckpoint registered for _drained cleanup: cuts the
-    frame's lineage so every downstream reference plans against a leaf
-    LogicalRDD (the reps scan+hash+winner subtree otherwise repeats through
-    the signature cache into EVERY band/verify branch of the final plan —
-    ~12k formatted-plan lines whose analysis/cache-matching the driver
-    re-pays per action; measured 4.08 -> 3.21 s on minhash_lsh_pairs).
-    Non-eager: the first consuming job materializes it, so no extra
-    barrier."""
-    from europa_spark.cluster import _tracked_local_checkpoint
-
-    out, ids = _tracked_local_checkpoint(df, eager=False)
-    reg.append(_CkptBlocks(df.sparkSession, ids))
-    return out
 
 
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,15 +233,14 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard: identical output as long as LSH candidate recall is 1.0 at
     this scale (verification is exact, so false positives are impossible)."""
     clean = _clean(spark, sf_dir)
-
-    def build(reg: list) -> DataFrame:
+    with Scope(spark) as scope:
         # reps feeds BOTH the signature UDF and the verify text join —
         # see _reps_for_kernels
-        return minhash_pairs(_reps_for_kernels(clean, reg), registry=reg).select(
+        return minhash_pairs(
+            _reps_for_kernels(clean, scope), registry=scope.frames
+        ).select(
             "url_a", "url_b", F.col("score").alias("jaccard")
-        )
-
-    return _drained(build)
+        ).localCheckpoint(eager=True)
 
 
 # gated simhash config: FNV-1a token hash, so the whole signature (and the
@@ -334,13 +293,10 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds bucket_cap (hot-bucket star routing never engages)."""
     clean = _clean(spark, sf_dir)
     check_ascii = _assert_ascii_async(clean)
-    out = _drained(
-        lambda reg: simhash_pairs(
-            _reps_for_kernels(clean, reg),
-            SIMHASH_FNV,
-            registry=reg,
-        ).select("url_a", "url_b", "score")
-    )
+    with Scope(spark) as scope:
+        out = simhash_pairs(
+            _reps_for_kernels(clean, scope), SIMHASH_FNV, registry=scope.frames
+        ).select("url_a", "url_b", "score").localCheckpoint(eager=True)
     check_ascii()
     return out
 
@@ -350,73 +306,61 @@ def _q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashes characters, the kernel hashes UTF-8 bytes
     clean = _clean(spark, sf_dir)
     check_ascii = _assert_ascii_async(clean)
-    out = _drained(
-        lambda reg: substring_pairs(
-            _reps_for_kernels(clean, reg),
-            registry=reg,
-        ).select("url_a", "url_b", "score")
-    )
+    with Scope(spark) as scope:
+        out = substring_pairs(
+            _reps_for_kernels(clean, scope), registry=scope.frames
+        ).select("url_a", "url_b", "score").localCheckpoint(eager=True)
     check_ascii()
     return out
 
 
-def _q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize-then-release (the _drained shape for pipeline outputs):
-    # without it the run()'s persisted frames leak into the session AND a
-    # repeated invocation (bench.py best-of-N reps) would hit the plan-keyed
-    # warm cache instead of re-executing the query it claims to time
-    docs = load_canonical(spark, sf_dir)
-    out = run(docs)
+def _from_run(spark: SparkSession, sf_dir: str, project) -> DataFrame:
+    """``project(run(...))`` materialized, then the run released: without
+    it the run()'s persisted frames leak into the session AND a repeated
+    invocation (bench.py best-of-N reps) would hit the plan-keyed warm
+    cache instead of re-executing the query it claims to time."""
+    out = run(load_canonical(spark, sf_dir))
     try:
-        return out["report"].localCheckpoint(eager=True)
+        return project(out).localCheckpoint(eager=True)
     finally:
         out["release"]()
+
+
+def _q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _from_run(spark, sf_dir, lambda out: out["report"])
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_canonical(spark, sf_dir)
-    out = run(docs)
     # member list serialized to ONE sorted '|'-joined STRING: the driver's
     # pandas canonicalizer cannot sort/hash ARRAY cells (r01 hard error);
     # the library API keeps the newest-first struct array
-    try:
-        return out["clusters"].select(
-            "cluster_id",
-            F.col("n_members").cast("long").alias("n_members"),
-            F.array_join(
-                F.array_sort(F.transform("members", lambda m: m["url"])), "|"
-            ).alias("member_urls"),
-        ).localCheckpoint(eager=True)
-    finally:
-        out["release"]()
+    return _from_run(spark, sf_dir, lambda out: out["clusters"].select(
+        "cluster_id",
+        F.col("n_members").cast("long").alias("n_members"),
+        F.array_join(
+            F.array_sort(F.transform("members", lambda m: m["url"])), "|"
+        ).alias("member_urls"),
+    ))
 
 
 def _q_nearest_duplicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-match top-1 per document (J8/H9 product shape —
     AudioHashGenerator.cs:46-48's single best match): for every doc with at
     least one confirmed near-dup, its highest-Jaccard neighbor."""
-    clean = _clean(spark, sf_dir)
-
-    def build(reg: list) -> DataFrame:
-        # same reps preparation as _q_minhash_pairs (two consumers)
-        return minhash_pairs(_reps_for_kernels(clean, reg), registry=reg).select(
-            "url_a", "url_b", "score"
-        )
-
-    pairs = _drained(build)
+    pairs = _q_minhash_pairs(spark, sf_dir)  # materialized, scope released
     sym = pairs.unionByName(
         pairs.select(
-            F.col("url_b").alias("url_a"), F.col("url_a").alias("url_b"), "score"
+            F.col("url_b").alias("url_a"), F.col("url_a").alias("url_b"), "jaccard"
         )
     )
-    w = Window.partitionBy("url_a").orderBy(F.desc("score"), F.asc("url_b"))
+    w = Window.partitionBy("url_a").orderBy(F.desc("jaccard"), F.asc("url_b"))
     return (
         sym.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .select(
             F.col("url_a").alias("url"),
             F.col("url_b").alias("nearest_url"),
-            F.col("score").alias("jaccard"),
+            "jaccard",
         )
     )
 
@@ -462,8 +406,8 @@ def _q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine gap falls under KNN_DRIFT_BOUND — a corpus change that made the
     rank gate drift-fragile becomes a hard error instead of a flaky hash.
     The in-repo API (knn_cosine_blocked) still returns the score."""
-    topk1 = knn_cosine_blocked(load_embeddings(spark, sf_dir), k=6).persist()
-    try:
+    with Scope(spark) as scope:
+        topk1 = scope.persist(knn_cosine_blocked(load_embeddings(spark, sf_dir), k=6))
         w = Window.partitionBy("vec_id").orderBy("rank")
         min_gap = (
             topk1.withColumn("next_cos", F.lead("cosine").over(w))
@@ -485,8 +429,6 @@ def _q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "neighbor_id", "rank")
             .localCheckpoint(eager=True)
         )
-    finally:
-        topk1.unpersist()
 
 
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,31 +649,25 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (url, n_tokens, lang_pred, cluster_id) for docs that are English, long
     enough, and NOT duplicates. Oracle = the same composition in SQL (the
     dedup recursive-CTE closure + the token/lang-ID twins)."""
-    docs = load_canonical(spark, sf_dir)
     clean = _clean(spark, sf_dir)
-    out = run(docs)
-    try:
-        q = quality_features(clean, text_col="extracted").select("url", "n_tokens")
-        lid = language_id(clean, text_col="extracted").select("url", "lang_pred")
-        kept = (
-            out["report"]
-            .join(q, "url")
-            .join(lid, "url")
-            .filter(
-                (F.col("lang_pred") == CURATION_LANG)
-                & (F.col("n_tokens") >= CURATION_MIN_TOKENS)
-                & (~F.col("is_duplicate"))
-            )
-            .select(
-                "url",
-                F.col("n_tokens").cast("long").alias("n_tokens"),
-                "lang_pred",
-                "cluster_id",
-            )
+    q = quality_features(clean, text_col="extracted").select("url", "n_tokens")
+    lid = language_id(clean, text_col="extracted").select("url", "lang_pred")
+    return _from_run(spark, sf_dir, lambda out: (
+        out["report"]
+        .join(q, "url")
+        .join(lid, "url")
+        .filter(
+            (F.col("lang_pred") == CURATION_LANG)
+            & (F.col("n_tokens") >= CURATION_MIN_TOKENS)
+            & (~F.col("is_duplicate"))
         )
-        return kept.localCheckpoint(eager=True)
-    finally:
-        out["release"]()
+        .select(
+            "url",
+            F.col("n_tokens").cast("long").alias("n_tokens"),
+            "lang_pred",
+            "cluster_id",
+        )
+    ))
 
 
 def _q_video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

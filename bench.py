@@ -13,8 +13,9 @@ ever ADDS time, so each headline query runs EUROPA_BENCH_REPS times (default
 tools/scaling_bench.py already uses. The full-pipeline throughput pass runs
 twice (release() between passes) and records the best wall. Per-query
 spreads are emitted alongside so a genuinely quiet host is distinguishable
-from a lucky one. Repeat runs re-execute the full plan: every gated query is
-wrapped in _drained() (persists are dropped before the query returns), so
+from a lucky one. Repeat runs re-execute the full plan: every gated pair
+query runs inside one europa_spark.scope.Scope (its persists and checkpoints
+are released before the query returns), so
 there is no cross-repetition cache reuse beyond JVM/JIT warmth — which both
 the first and last repetition share with the scaling protocol's discarded
 warmup pair.

@@ -72,10 +72,11 @@ def banded_pairs(
     ``index`` when probes are given (incremental; probes share the index's
     columns and are contained in it).
 
-    ``registry`` (batch only): the band table and bucket stats are persisted
-    behind one barrier job and appended for the caller to unpersist when
-    done. With ``registry=None`` nothing is cached: the result is a lazy
-    plan (a cache dropped before its consumer runs would only add a job)."""
+    ``registry`` (batch only; a Scope's ``frames``): the band table and
+    bucket stats are persisted behind one barrier job and appended for the
+    scope's release. With ``registry=None`` nothing is cached: the result is
+    a lazy plan (a cache dropped before its consumer runs would only add a
+    job)."""
     payload = list(payload)
     if probes is not None:
         return _probe_pairs(index, probes, cfg, payload)

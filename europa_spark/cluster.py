@@ -23,11 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scope import Scope
+
 
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
     n_edges_hint: int | None = None,
+    scope: Scope | None = None,
 ) -> DataFrame:
     """pairs(url_a, url_b, ...) -> (url, cluster_id = min url of component).
 
@@ -40,20 +43,11 @@ def connected_components(
     ``pairs`` measures it, so an expensive lazy ``pairs`` plan is best
     cached first.
 
-    The result is backed by the final round's local checkpoint, whose
-    blocks Spark's ContextCleaner reclaims once the frame is garbage
-    collected; callers that free storage explicitly use
-    ``tracked_connected_components``.
+    The result is backed by the final round's local checkpoint, which
+    ``scope`` holds until its release; with ``scope=None`` Spark's
+    ContextCleaner reclaims it once the frame is garbage collected.
     """
-    return tracked_connected_components(pairs, max_iter, n_edges_hint)[0]
-
-
-def tracked_connected_components(
-    pairs: DataFrame, max_iter: int = 25, n_edges_hint: int | None = None
-) -> tuple[DataFrame, set]:
-    """connected_components + the persistent-RDD ids of the checkpoint
-    backing the result, for a caller that unpersists them once it is done
-    with the frame (pipeline.run's release())."""
+    scope = scope or Scope(pairs.sparkSession)
     edges = pairs.select("url_a", "url_b").distinct()
     # symmetric adjacency (undirected graph as two directed edges)
     adj = edges.unionByName(
@@ -98,56 +92,15 @@ def tracked_connected_components(
         n_edges_hint = edges.count()
     # non-eager: round 0's convergence count materializes the repartition
     # while it truncates the lineage
-    adj, adj_ids = _tracked_local_checkpoint(
-        adj.repartition(_loop_parts(2 * n_edges_hint), "url_b"), eager=False
+    adj = scope.checkpoint(
+        adj.repartition(_loop_parts(2 * n_edges_hint), "url_b")
     )
     try:
-        return _cc_loop(adj, max_iter)
+        return _cc_loop(adj, max_iter, scope)
     finally:
         # the final labels are checkpointed, so the adjacency is dead weight
         # the moment the loop returns
-        _unpersist_ids(pairs.sparkSession, adj_ids)
-
-
-_CKPT_LOCK = __import__("threading").Lock()
-
-
-def _tracked_local_checkpoint(
-    df: DataFrame, eager: bool = True
-) -> tuple[DataFrame, set]:
-    """localCheckpoint + the set of persistent-RDD ids it registered, so the
-    loop can free superseded rounds (C3 unpersist hygiene: without this,
-    every round's label table stays in the block store for the session's
-    lifetime). The before/after diff of ALL persistent RDDs would mis-capture
-    a concurrent driver thread's cache on a shared session, so the
-    checkpoint runs under a module lock — serializing only the (driver-side,
-    cheap) checkpoint registration, not the Spark jobs themselves.
-
-    ``eager=False`` skips the materializing count: the checkpoint RDD is
-    registered (and tracked) at mark time, and whichever downstream action
-    first touches it computes + stores the blocks — callers use this to fold
-    several materializations into one blocking job (the union-find loop's
-    one-job-per-round protocol)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    with _CKPT_LOCK:
-        # non-eager: the persist REGISTRATION happens at mark time (cheap,
-        # driver-side) — only that sits under the lock; the materializing
-        # Spark job runs below, outside it, so concurrent threads' jobs
-        # still overlap
-        before = set(jsc.getPersistentRDDs().keySet().toArray())
-        out = df.localCheckpoint(eager=False)
-        after = set(jsc.getPersistentRDDs().keySet().toArray())
-    if eager:
-        out.count()  # eager semantics preserved for callers
-    return out, after - before
-
-
-def _unpersist_ids(spark, ids: set) -> None:
-    persistent = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = persistent.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
+        scope.free(adj)
 
 
 def _init_labels(adj: DataFrame) -> DataFrame:
@@ -159,9 +112,7 @@ def _init_labels(adj: DataFrame) -> DataFrame:
     )
 
 
-def _cc_loop(adj: DataFrame, max_iter: int) -> tuple[DataFrame, set]:
-    spark = adj.sparkSession
-
+def _cc_loop(adj: DataFrame, max_iter: int, scope: Scope) -> DataFrame:
     # ONE blocking job per round: labels are never materialized on their own
     # — round r's convergence count is the single action, and it computes
     # (and checkpoints) everything the round needs: the adjacency (round 0),
@@ -174,7 +125,7 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> tuple[DataFrame, set]:
     # forests of stars (exact groups + hot-bucket routing emit anchor->member
     # edges) whose init labels are already final — they converge in ONE job.
     labels = _init_labels(adj)  # lazy; referenced twice by round 0 (cheap agg)
-    prev_ids: set = set()
+    prev = None
 
     for it in range(max_iter):
         # propagate: every neighbor's label is a candidate for mine. The old
@@ -196,25 +147,23 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> tuple[DataFrame, set]:
         # (all partitions — count scans everything), cuts the round's
         # lineage, and leaves the blocks cached for the doubling join /
         # the final result — one job does the whole round.
-        stepped, step_ids = _tracked_local_checkpoint(stepped_plan, eager=False)
+        stepped = scope.checkpoint(stepped_plan)
         try:
             changed = stepped.filter("label != old_label").count()
         except BaseException:
             # a cancelled/failed round must not leak its checkpoint blocks
             # (r4 ADVICE #3)
-            _unpersist_ids(spark, step_ids)
+            scope.free(stepped)
             raise
         # the previous round's checkpoint is superseded the moment this
         # one materializes — free it
-        _unpersist_ids(spark, prev_ids)
-        prev_ids = step_ids
+        if prev is not None:
+            scope.free(prev)
+        prev = stepped
         if changed == 0:
-            # stepped IS the fixpoint label table (checkpointed; its ids go
-            # to the caller, which owns the blocks from here on)
-            return (
-                stepped.select("url", F.col("label").alias("cluster_id")),
-                step_ids,
-            )
+            # stepped IS the fixpoint label table (checkpointed; the scope
+            # holds its blocks from here on)
+            return stepped.select("url", F.col("label").alias("cluster_id"))
         # pointer doubling: also adopt my label's label — turns the
         # O(diameter) propagation into O(log diameter) rounds. Lazy: the
         # NEXT round's convergence count materializes it off the stepped
@@ -229,7 +178,8 @@ def _cc_loop(adj: DataFrame, max_iter: int) -> tuple[DataFrame, set]:
             stepped.join(lut, stepped["label"] == lut["l_url"], "left")
             .select("url", final_label.alias("label"))
         )
-    _unpersist_ids(spark, prev_ids)
+    if prev is not None:
+        scope.free(prev)
     raise RuntimeError(f"union-find did not converge in {max_iter} rounds")
 
 

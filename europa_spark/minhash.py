@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
+from .scope import Scope
 
 
 def maybe_broadcast(df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -319,8 +320,8 @@ def candidate_pairs(
 
     ``registry=None`` (direct API calls): nothing is cached, the result is
     a lazy plan. Pass a registry to cache the band table and bucket stats
-    across consumers and unpersist them when done (the pipeline/_drained
-    pattern).
+    across consumers and unpersist them when done (pass a Scope's
+    ``frames``).
     """
     index = bands.withColumnRenamed("band_hash", "band_key")
     return banded_pairs(index, cfg, registry=registry)
@@ -462,6 +463,7 @@ def incremental_minhash_pairs(
     new_reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
     existing_pairs: DataFrame | None = None,
+    scope: Scope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Delta compute for newly-arrived documents (J4/J5 resume semantics:
     cached signatures are never recomputed, verified pairs never re-verified,
@@ -473,17 +475,19 @@ def incremental_minhash_pairs(
     probes are ONLY the new docs' bands, joined against the full band index
     (old pairs among existing docs are already in the checkpoint). The
     index grows with the whole corpus, so its hot buckets are capped exactly
-    like the batch path (bands.banded_pairs, incremental mode).
+    like the batch path (bands.banded_pairs, incremental mode). new_sigs is
+    a checkpoint that ``scope`` holds (cluster.connected_components).
     """
-    # localCheckpoint: the minhash UDF subtree feeds four consumers (probe
+    # eager checkpoint: the minhash UDF subtree feeds four consumers (probe
     # bands, the accumulated index union, the verify text join, and the
     # caller's state write) — without a barrier it recomputes per consumer
     # every micro-batch (the simhash/substring incremental paths checkpoint
     # theirs for the same reason)
     cols = ["url", "extracted", "minhash"]
-    new_sigs = with_signatures(
-        new_reps.select("url", "extracted"), cfg
-    ).localCheckpoint()
+    new_sigs = (scope or Scope(new_reps.sparkSession)).checkpoint(
+        with_signatures(new_reps.select("url", "extracted"), cfg)
+    )
+    new_sigs.count()
     all_sigs = existing_sigs.select(*cols).unionByName(new_sigs)
 
     def index(sigs):
@@ -510,7 +514,7 @@ def minhash_pairs(
     lazy plan. Pass a registry to cache the signatures, band table,
     candidates and verify text across consumers: it collects every
     DataFrame persisted here so the caller can unpersist them when done
-    (pipeline.run's release())."""
+    (a Scope's ``frames`` list, freed by its release())."""
     if sigs is None:
         sigs = with_signatures(reps, cfg)
         if registry is not None:

@@ -22,17 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import CheckpointStore
-from .cluster import (
-    _tracked_local_checkpoint,
-    _unpersist_ids,
-    cluster_members,
-    tracked_connected_components,
-)
+from .cluster import cluster_members, connected_components
 from .config import DedupConfig, CANONICAL
 from .exact import content_hash_col, exact_pairs, exact_membership
 from .extract import split_quarantine, with_extracted
 from .minhash import maybe_broadcast, minhash_pairs, with_signatures
 from .progress import ProgressTracker
+from .scope import Scope
 from .simhash import simhash_pairs
 from .substring import substring_pairs
 
@@ -78,9 +74,10 @@ def run(
 ) -> dict[str, DataFrame]:
     """Returns {'quarantine', 'membership', 'pairs', 'components',
     'clusters', 'report', 'release'} — DataFrames plus a ``release()``
-    callable that unpersists every frame this run cached (call it when done
-    consuming the outputs; a long-lived session otherwise accumulates
-    storage blocks across runs).
+    callable that unpersists every frame and checkpoint this run cached
+    (call it when done consuming the outputs; a long-lived session otherwise
+    accumulates storage blocks across runs). A run that raises releases
+    them itself before the error propagates.
 
     ``methods``: any subset of METHODS. A ``store`` keys each stage by
     the method set as well as by name and config hash, so a store filled
@@ -93,54 +90,23 @@ def run(
     unknown = set(methods) - set(METHODS)
     if unknown:
         raise ValueError(f"unknown methods {sorted(unknown)}; known: {METHODS}")
+    scope = Scope(docs.sparkSession, tracker)
+    try:
+        return _outputs(docs, cfg, methods, store, scope)
+    except BaseException:
+        scope.release()
+        raise
+
+
+def _outputs(
+    docs: DataFrame, cfg: DedupConfig, methods: tuple[str, ...],
+    store: CheckpointStore | None, scope: Scope,
+) -> dict:
     spark = docs.sparkSession
-    persisted: list[DataFrame] = []
-
-    def _persist(df: DataFrame) -> DataFrame:
-        # LAZY persist: marks the subtree for caching so multi-consumer
-        # frames compute once, but adds no materialization barrier — the
-        # final actions trigger the whole DAG in one pass. (The r01 design
-        # eagerly persist().count()ed every stage: ~10 serial job barriers
-        # that dominated wall time as a corpus-independent floor.)
-        persisted.append(df)
-        return df.persist()
-
-    ckpt_ids: set = set()
-
-    def _truncate(df: DataFrame) -> tuple[DataFrame, int]:
-        # EAGER materialization that ALSO cuts lineage (localCheckpoint):
-        # one barrier job (a count, whose row total is returned alongside
-        # the frame), after which downstream actions
-        # plan against a leaf LogicalRDD instead of the full composed tree.
-        # The deep frames here (signatures -> bands -> candidates -> verify
-        # -> union) nest the whole upstream plan MULTIPLICATIVELY (each
-        # self-join/union repeats the subtree), and Catalyst re-analyzes +
-        # cache-matches that tree on EVERY downstream action — measured
-        # ~2 s of pure driver planning per action on the cached pairs frame
-        # at sf0.1 (count() on fully-cached 248 rows: 2.65 s; same count
-        # after truncation: 0.11 s). The union-find loop alone paid it 2-3
-        # times per run (r5's "components ~5.7 s driver floor" was mostly
-        # this). Blocks are tracked and freed by release() like persists.
-        out, ids = _tracked_local_checkpoint(df, eager=False)
-        ckpt_ids.update(ids)
-        return out, out.count()
-
-    def release() -> None:
-        for df in persisted:
-            df.unpersist()
-        persisted.clear()
-        _unpersist_ids(spark, ckpt_ids)
-        ckpt_ids.clear()
-
     method_key = "+".join(sorted(set(methods)))  # no glob chars: a path
 
     def stage(name: str, compute):
-        t0 = tracker.begin(name) if tracker is not None else None
-        # tag every job this stage launches (thread-local): the Spark UI and
-        # the event log then attribute shuffle/CPU metrics to the pipeline
-        # stage by name (tools/stage_bytes.py reads them back)
-        spark.sparkContext.setJobDescription(f"europa:{name}")
-        try:
+        with scope.stage(name):
             if store is None:
                 # store-less: stages stay lazy; only genuinely
                 # multi-consumer frames are persisted by the caller below.
@@ -149,12 +115,7 @@ def run(
             # and a resumed run reads it back (J5 cache-hit semantics). The
             # key names the method set: a stage stored under one set (say
             # pairs without substring rows) is stale under another.
-            df, _ = store.get_or_compute(spark, f"{name}.{method_key}", compute)
-            return df
-        finally:
-            spark.sparkContext.setJobDescription(None)
-            if tracker is not None:
-                tracker.end(name, t0)
+            return store.get_or_compute(spark, f"{name}.{method_key}", compute)[0]
 
     filtered = apply_filters(docs, cfg)
     extracted = with_extracted(filtered)
@@ -175,13 +136,12 @@ def run(
     # (timing only — no checkpoint table) so the scaling profile attributes
     # the scan+extract+cache bytes to the right phase (near-zero now: the
     # fill bills to signatures_dual).
-    t0 = tracker.begin("extract_clean") if tracker is not None else None
-    try:
+    with scope.stage("extract_clean"):
         # content_hash is computed INTO the cache (sha2 is CPU, which
         # scales; a separate hashing pass would re-stream the 2.5 KB/row
         # text column out of the cache — bytes, which don't): membership
         # then reads only (url, ts, 64 B hash) via columnar pruning
-        clean = _persist(
+        clean = scope.persist(
             clean.select("url", "warc_ts", "extracted").withColumn(
                 "content_hash", content_hash_col()
             )
@@ -199,9 +159,6 @@ def run(
         # fill — interleaved A/B measured it SLOWER everywhere warm
         # (OPTIMIZATION_r06.md, "Clean-cache fill race"), so the fill stays
         # lazy.
-    finally:
-        if tracker is not None:
-            tracker.end("extract_clean", t0)
     # quarantine stays lazy without a store: it is an output, not an input
     # of any later stage — eager materialization would bill a full extra
     # extract pass to every pipeline run that never reads it
@@ -210,7 +167,7 @@ def run(
 
     # narrow frame consumed by exact pairs AND the winner-url projection
     membership = stage(
-        "membership", lambda: _persist(exact_membership(clean, cfg))
+        "membership", lambda: scope.persist(exact_membership(clean, cfg))
     )
     # representatives WITHOUT moving text: membership's window shuffles only
     # narrow columns (url, ts, hash), and the winner-url set broadcasts back
@@ -236,26 +193,30 @@ def run(
         # exactly the requested kinds in a single Arrow transfer of the text
         # (the pipeline's dominant byte stream; bytes moved are the measured
         # scaling ceiling). Only url, the substring pass's 8-byte uid and
-        # the narrow signatures are checkpointed, never the text. Eager:
-        # every pair chain below reads it, and their barriers race. The
-        # default method set keeps the 'signatures_dual' tag, by which its
-        # per-stage metrics are read back.
+        # the narrow signatures are checkpointed, never the text. Eager (one
+        # count materializes the checkpoint): every pair chain below reads
+        # it, and their barriers race. The default method set keeps the
+        # 'signatures_dual' tag, by which its per-stage metrics are read
+        # back.
+        def _sigs() -> DataFrame:
+            out = scope.checkpoint(with_signatures(reps, cfg, kinds=kinds).select(
+                F.xxhash64("url").alias("uid"), "url", *kinds
+            ))
+            out.count()
+            return out
+
         sigs = stage(
             "signatures_dual"
             if set(methods) == set(DEFAULT_METHODS) else "signatures",
-            lambda: _truncate(
-                with_signatures(reps, cfg, kinds=kinds).select(
-                    F.xxhash64("url").alias("uid"), "url", *kinds
-                )
-            )[0],
+            _sigs,
         )
         chains = (
             ("minhash", lambda: minhash_pairs(
-                reps, cfg, sigs=sigs, registry=persisted)),
+                reps, cfg, sigs=sigs, registry=scope.frames)),
             ("substring", lambda: substring_pairs(
-                reps, cfg, registry=persisted, fp_arrays=sigs)),
+                reps, cfg, registry=scope.frames, fp_arrays=sigs)),
             ("simhash", lambda: simhash_pairs(
-                None, cfg, sigs=sigs, registry=persisted)),
+                None, cfg, sigs=sigs, registry=scope.frames)),
         )
         requested = [(f"pairs_{m}", c) for m, c in chains if m in methods]
         # the pair chains are independent until the pair union — submit them
@@ -280,31 +241,28 @@ def run(
 
     # pairs is consumed by union-find AND returned as an output — eager, so
     # the heavy verify/vote join subtrees run exactly once (and the
-    # components stage timer measures only the clustering loop)
+    # components stage timer measures only the clustering loop). The
+    # checkpoint matters most here: on the cached but untruncated pair
+    # frame every downstream action re-analyzed the whole composed tree
+    # (sf0.1, count() on 248 cached rows: 2.65 s; after truncation:
+    # 0.11 s), which the union-find loop paid 2-3 times per run.
     n_pairs: list[int] = []
 
     def _pairs() -> DataFrame:
-        out, n = _truncate(
+        out = scope.checkpoint(
             reduce(DataFrame.unionByName, pair_frames)
             .dropDuplicates(["url_a", "url_b"])
         )
-        n_pairs.append(n)
+        n_pairs.append(out.count())
         return out
 
     pairs = stage("pairs", _pairs)
-
-    def _components() -> DataFrame:
-        # the hint sizes union-find's adjacency; it is the pairs
-        # checkpoint's own materializing count, so only a stage resumed
-        # from the store (which skipped _pairs) lets union-find count the
-        # edges again. The result's checkpoint is freed by release().
-        out, ids = tracked_connected_components(
-            pairs, n_edges_hint=n_pairs[0] if n_pairs else None
-        )
-        ckpt_ids.update(ids)
-        return out
-
-    components = stage("components", _components)
+    # the hint sizes union-find's adjacency; it is the pairs checkpoint's
+    # own materializing count, so only a stage resumed from the store (which
+    # skipped _pairs) lets union-find count the edges again
+    components = stage("components", lambda: connected_components(
+        pairs, n_edges_hint=n_pairs[0] if n_pairs else None, scope=scope
+    ))
     # outputs read (url, warc_ts) from the NARROW persisted membership frame
     # (1:1 with clean — a window adds columns, drops no rows), NOT from the
     # wide clean cache: at multi-million-row scale the text cache is the
@@ -338,5 +296,5 @@ def run(
         "components": components,
         "clusters": clusters,
         "report": report,
-        "release": release,
+        "release": scope.release,
     }

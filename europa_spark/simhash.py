@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
 from .minhash import _token_hash, with_signatures
+from .scope import Scope
 
 _U64 = np.uint64
 _BIGRAM_MIX = _U64(0xC2B2AE3D27D4EB4F)
@@ -199,6 +200,7 @@ def incremental_simhash_pairs(
     new_reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
     existing_pairs: DataFrame | None = None,
+    scope: Scope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Delta compute for newly-arrived documents (J4/J5 resume semantics,
     mirroring minhash/substring): cached signatures never recompute; probes
@@ -209,12 +211,12 @@ def incremental_simhash_pairs(
     Returns (new_sigs(url, simhash), new_pairs) — new_pairs touches at
     least one new doc. The index grows with the whole corpus, so its hot
     buckets (e.g. near-empty docs all hashing to simhash 0) are capped
-    exactly like the batch path (bands.banded_pairs, incremental mode)."""
-    new_sigs = (
-        with_signatures(new_reps, cfg, kinds=("simhash",))
-        .select("url", "simhash")
-        .localCheckpoint()
+    exactly like the batch path (bands.banded_pairs, incremental mode).
+    new_sigs is a checkpoint that ``scope`` holds."""
+    new_sigs = (scope or Scope(new_reps.sparkSession)).checkpoint(
+        with_signatures(new_reps, cfg, kinds=("simhash",)).select("url", "simhash")
     )
+    new_sigs.count()
     all_sigs = existing_sigs.select("url", "simhash").unionByName(new_sigs)
     cands = banded_pairs(
         _band_index(all_sigs, cfg), cfg, ["simhash"], probes=_band_index(new_sigs, cfg)

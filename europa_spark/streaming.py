@@ -38,6 +38,7 @@ from .config import CANONICAL
 from .exact import content_hash_col, representatives, with_content_hash
 from .extract import split_quarantine, with_extracted
 from .minhash import incremental_minhash_pairs
+from .scope import Scope
 from .simhash import incremental_simhash_pairs
 from .substring import incremental_substring_pairs
 
@@ -121,47 +122,48 @@ def _start(spark: SparkSession, source_dir: str, handler, checkpoint_dir: str):
 
 def process_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     spark = batch_df.sparkSession
-    clean, _ = split_quarantine(with_extracted(batch_df))
-    hashed = clean.select(
-        "url", content_hash_col().alias("content_hash")
-    ).localCheckpoint()
+    with Scope(spark) as scope:
+        clean, _ = split_quarantine(with_extracted(batch_df))
+        hashed = clean.select("url", content_hash_col().alias("content_hash"))
 
-    seen = _read_state(
-        spark, _seen_path(state_dir), "content_hash string, first_url string",
-        batch_id,
-    )
-    joined = hashed.join(
-        seen.withColumnRenamed("first_url", "seen_url"), "content_hash", "left"
-    ).localCheckpoint()
+        seen = _read_state(
+            spark, _seen_path(state_dir), "content_hash string, first_url string",
+            batch_id,
+        )
+        # eager checkpoint: both state writes below read the joined rows
+        joined = scope.checkpoint(hashed.join(
+            seen.withColumnRenamed("first_url", "seen_url"), "content_hash", "left"
+        ))
+        joined.count()
 
-    # cross-batch duplicates: hash already in state
-    cross = joined.filter(F.col("seen_url").isNotNull()).select(
-        "url",
-        F.col("seen_url").alias("duplicate_of"),
-        "content_hash",
-    )
-    # intra-batch: first (min url) wins among unseen hashes
-    unseen = joined.filter(F.col("seen_url").isNull())
-    firsts = unseen.groupBy("content_hash").agg(F.min("url").alias("first_url"))
-    intra = (
-        unseen.join(firsts, "content_hash")
-        .filter(F.col("url") != F.col("first_url"))
-        .select(
+        # cross-batch duplicates: hash already in state
+        cross = joined.filter(F.col("seen_url").isNotNull()).select(
             "url",
-            F.col("first_url").alias("duplicate_of"),
+            F.col("seen_url").alias("duplicate_of"),
             "content_hash",
         )
-    )
-    dups = cross.unionByName(intra)
-    # per-batch partition + overwrite = exactly-once output under replay:
-    # batch content is deterministic given (batch rows, state<batch_id), so
-    # a recovery replay rewrites identical rows instead of appending copies
-    dups.write.mode("overwrite").parquet(
-        os.path.join(_dup_log_path(state_dir), f"batch_id={batch_id}")
-    )
-    firsts.select("content_hash", "first_url").write.mode("overwrite").parquet(
-        os.path.join(_seen_path(state_dir), f"batch_id={batch_id}")
-    )
+        # intra-batch: first (min url) wins among unseen hashes
+        unseen = joined.filter(F.col("seen_url").isNull())
+        firsts = unseen.groupBy("content_hash").agg(F.min("url").alias("first_url"))
+        intra = (
+            unseen.join(firsts, "content_hash")
+            .filter(F.col("url") != F.col("first_url"))
+            .select(
+                "url",
+                F.col("first_url").alias("duplicate_of"),
+                "content_hash",
+            )
+        )
+        dups = cross.unionByName(intra)
+        # per-batch partition + overwrite = exactly-once output under replay:
+        # batch content is deterministic given (batch rows, state<batch_id), so
+        # a recovery replay rewrites identical rows instead of appending copies
+        dups.write.mode("overwrite").parquet(
+            os.path.join(_dup_log_path(state_dir), f"batch_id={batch_id}")
+        )
+        firsts.select("content_hash", "first_url").write.mode("overwrite").parquet(
+            os.path.join(_seen_path(state_dir), f"batch_id={batch_id}")
+        )
 
 
 def start_incremental_dedup(
@@ -240,15 +242,17 @@ def process_batch_pairs(
     pairs_path = os.path.join(state_dir, pairs_dir)
     existing_sigs = _read_state(spark, sigs_path, sigs_schema, batch_id)
     existing_pairs = _read_state(spark, pairs_path, _PAIRS_SCHEMA, batch_id)
-    new_sigs, new_pairs = incremental(
-        existing_sigs, new_reps, cfg, existing_pairs=existing_pairs
-    )
-    new_sigs.select(*existing_sigs.columns).write.mode("overwrite").parquet(
-        os.path.join(sigs_path, f"batch_id={batch_id}")
-    )
-    new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
-        os.path.join(pairs_path, f"batch_id={batch_id}")
-    )
+    with Scope(spark) as scope:
+        new_sigs, new_pairs = incremental(
+            existing_sigs, new_reps, cfg, existing_pairs=existing_pairs,
+            scope=scope,
+        )
+        new_sigs.select(*existing_sigs.columns).write.mode("overwrite").parquet(
+            os.path.join(sigs_path, f"batch_id={batch_id}")
+        )
+        new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(
+            os.path.join(pairs_path, f"batch_id={batch_id}")
+        )
 
 
 def start_incremental_pairs(

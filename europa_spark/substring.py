@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig, CANONICAL
 from .minhash import with_signatures
+from .scope import Scope
 
 _U64 = np.uint64
 _ROLL_BASE = _U64(1099511628211)  # FNV prime, odd
@@ -297,6 +298,7 @@ def incremental_substring_pairs(
     cfg: DedupConfig = CANONICAL,
     max_df: int = WINNOW_MAX_DF,
     existing_pairs: DataFrame | None = None,
+    scope: Scope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Delta compute for newly-arrived documents (J4/J5 resume semantics,
     mirroring minhash.incremental_minhash_pairs): cached fingerprints are
@@ -307,14 +309,17 @@ def incremental_substring_pairs(
     Returns (new_fps, new_pairs): new_pairs touches at least one new doc.
     The stop-fingerprint df-cap is evaluated over the FULL index so a
     boilerplate fingerprint stays capped as its document frequency grows
-    across batches.
+    across batches. new_fps is a checkpoint that ``scope`` holds.
     """
     cols = ["uid", "url", "fps"]
-    # localCheckpoint: the winnow UDF subtree feeds four consumers (rare
+    # eager checkpoint: the winnow UDF subtree feeds four consumers (rare
     # count, index join side, probe join side, and the caller's state
     # write) — without a barrier it recomputes per consumer (the same
     # measured anti-pattern the batch path's persist().count() prevents)
-    new_fps = with_fingerprints(new_reps, cfg).localCheckpoint()
+    new_fps = (scope or Scope(new_reps.sparkSession)).checkpoint(
+        with_fingerprints(new_reps, cfg)
+    )
+    new_fps.count()
     all_fps = existing_fps.select(*cols).unionByName(new_fps.select(*cols))
     index = all_fps.select("uid", "url", F.explode("fps").alias("fp"))
     rare = (

@@ -78,3 +78,26 @@ def test_no_unbounded_driver_pulls():
         if scope not in DRIVER_PULL_ALLOWED
     ]
     assert not found, found
+
+
+def _local_checkpoint_calls(tree: ast.AST) -> list[int]:
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+
+
+def test_local_checkpoints_only_in_scope():
+    """Every checkpoint the library makes goes through scope.Scope, which
+    tracks its blocks and frees them on release: a bare .localCheckpoint()
+    elsewhere leaves its blocks until Spark's ContextCleaner runs."""
+    found = {
+        f.name: lines
+        for f in sorted(PKG.glob("*.py"))
+        if f.name != "scope.py"
+        and (lines := _local_checkpoint_calls(ast.parse(f.read_text(), str(f))))
+    }
+    assert not found, found

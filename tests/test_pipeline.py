@@ -120,23 +120,64 @@ def test_live_progress_without_store(spark, docs_df):
     )
 
 
+def _cached_ids(spark) -> set[int]:
+    jsc = spark.sparkContext._jsc.sc()
+    return {
+        i.id() for i in jsc.getRDDStorageInfo() if i.numCachedPartitions() > 0
+    }
+
+
 def test_release_unpersists_everything(spark, docs_df):
     """Storage hygiene: release() must drop every block this run cached —
     repeated runs in one session may not accumulate storage memory."""
-    jsc = spark.sparkContext._jsc.sc()
-
-    def cached_ids():
-        return {
-            i.id() for i in jsc.getRDDStorageInfo() if i.numCachedPartitions() > 0
-        }
-
-    before = cached_ids()  # other tests' module-scoped caches may be live
+    before = _cached_ids(spark)  # other tests' module-scoped caches may be live
     out = run(docs_df)
     out["report"].count()  # materialize (lazy persists fill the cache)
-    assert cached_ids() - before, "run should have cached frames"
+    assert _cached_ids(spark) - before, "run should have cached frames"
     out["release"]()
-    leftover = cached_ids() - before
+    leftover = _cached_ids(spark) - before
     assert not leftover, leftover
+
+
+def test_failed_run_releases_everything(spark, docs_df):
+    """A run that raises mid-way (here: at the components stage, after the
+    signature and pair checkpoints and the pair chains' caches are filled)
+    frees every block it cached before the error reaches the caller."""
+    from europa_spark.progress import ProgressTracker
+
+    class Stop(Exception):
+        pass
+
+    def on_event(ev):
+        if ev.stage == "components" and ev.kind == "begin":
+            raise Stop
+
+    before = _cached_ids(spark)
+    with pytest.raises(Stop):
+        run(docs_df, tracker=ProgressTracker(on_event=on_event))
+    leftover = _cached_ids(spark) - before
+    assert not leftover, leftover
+
+
+def test_scope_releases_on_exception(spark):
+    """A Scope body that persists, checkpoints and raises leaves nothing
+    persisted."""
+    from europa_spark.scope import Scope
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    with pytest.raises(ZeroDivisionError):
+        with Scope(spark) as scope:
+            df = scope.persist(spark.range(100).withColumn("k", F.col("id") % 7))
+            ck = scope.checkpoint(df.groupBy("k").count())
+            assert ck.count() == 7
+            assert len(persistent() - before) == 2
+            1 / 0
+    assert persistent() - before == set()
 
 
 def test_memory_page_size_does_not_follow_heap(spark):

@@ -47,14 +47,21 @@ def _write_docs(path: str, rows: list[tuple[str, str]]) -> None:
     pq.write_table(t, path)
 
 
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_incremental_stream_dedup(spark, tmp_path):
     src = tmp_path / "src"
     state = str(tmp_path / "state")
     os.makedirs(src)
 
     _write_docs(str(src / "b1.parquet"), [("u1", "alpha beta"), ("u2", "alpha beta"), ("u3", "unique one")])
+    before = _persistent_ids(spark)
     q = start_incremental_dedup(spark, str(src), state)
     q.awaitTermination(120)
+    # the batch's checkpoint is freed once its state writes finish
+    assert _persistent_ids(spark) - before == set()
 
     log1 = {(r["url"], r["duplicate_of"]) for r in read_dup_log(spark, state).collect()}
     assert log1 == {("u2", "u1")}  # intra-batch dup, first-wins by min url
@@ -171,11 +178,14 @@ def test_incremental_stream_pairs(spark, tmp_path, method):
     base, variant, unrelated = _stream_texts(method)
 
     _write_docs(str(src / "b1.parquet"), [("d1", base), ("d2", unrelated)])
+    before = _persistent_ids(spark)
     start_incremental_pairs(spark, str(src), state, method).awaitTermination(120)
     assert _pair_rows(spark, state, method) == set()
 
     _write_docs(str(src / "b2.parquet"), [("d3", variant)])
     start_incremental_pairs(spark, str(src), state, method).awaitTermination(120)
+    # each batch frees its new-signature checkpoint once its writes finish
+    assert _persistent_ids(spark) - before == set()
     got = _pair_rows(spark, state, method)
     assert {(a, b) for a, b, _ in got} == {("d1", "d3")}, got
 
