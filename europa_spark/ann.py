@@ -295,8 +295,10 @@ def embedding_dup_pairs_lsh(
     )
     a = q.select(F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa"), "bucket")
     b = q.select(F.col("vec_id").alias("vec_id_b"), F.col("qv").alias("qb"), "bucket")
+    # a shuffled join: both sides read one reused exchange of q, so the
+    # bucket UDF runs once (a broadcast side reran it)
     cands = (
-        a.join(b, "bucket")
+        a.join(b.hint("shuffle_hash"), "bucket")
         .filter(F.col("vec_id_a") < F.col("vec_id_b"))
         .dropDuplicates(["vec_id_a", "vec_id_b"])
     )
@@ -354,17 +356,15 @@ def kmeans_centroids(
     return C
 
 
-def _cosine_topk(
-    queries: DataFrame, index: DataFrame, key: str, k: int
-) -> DataFrame:
-    """Exact cosine re-rank shared by ann_ivf and ann_lsh: the query rows
-    (vec_id, ea) meet the index rows (neighbor_id, eb) on ``key``; each
-    distinct non-self pair is scored and the top-k kept per vec_id, ties by
-    neighbor_id. Dot and norms are ordered left folds in double, so the
-    DuckDB twins (knn_cosine_fold_sql, ann_lsh_sql) replay every rounding."""
+def _cosine_topk(joined: DataFrame, k: int) -> DataFrame:
+    """Exact cosine re-rank shared by ann_ivf and ann_lsh: ``joined`` holds
+    the query rows (vec_id, ea) met with the index rows (neighbor_id, eb);
+    each distinct non-self pair is scored and the top-k kept per vec_id,
+    ties by neighbor_id. Dot and norms are ordered left folds in double, so
+    the DuckDB twins (knn_cosine_fold_sql, ann_lsh_sql) replay every
+    rounding."""
     cands = (
-        queries.join(index, key)
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        joined.filter(F.col("vec_id") != F.col("neighbor_id"))
         .dropDuplicates(["vec_id", "neighbor_id"])
     )
     dot = F.aggregate(
@@ -438,7 +438,7 @@ def ann_ivf(
         F.col("embedding").alias("ea"),
         F.explode(cells_udf(n_probe)(F.col("embedding"))).alias("cell"),
     )
-    return _cosine_topk(probes, index, "cell", k)
+    return _cosine_topk(probes.join(index, "cell"), k)
 
 
 def _fold_sum_sql(terms: str) -> str:
@@ -576,8 +576,14 @@ def ann_lsh(
     with_b = emb.select(
         "vec_id", "embedding", F.explode(buckets(F.col("embedding"))).alias("bucket")
     )
-    a = with_b.select(F.col("vec_id"), F.col("embedding").alias("ea"), "bucket")
-    b = with_b.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("eb"), "bucket"
+    # one aliased frame in a shuffled join: both sides read one reused
+    # exchange, so the bucket UDF runs once (sides projected apart, or a
+    # broadcast side, reran it)
+    a, b = with_b.alias("a"), with_b.alias("b")
+    joined = a.join(b.hint("shuffle_hash"), "bucket").select(
+        F.col("a.vec_id").alias("vec_id"),
+        F.col("a.embedding").alias("ea"),
+        F.col("b.vec_id").alias("neighbor_id"),
+        F.col("b.embedding").alias("eb"),
     )
-    return _cosine_topk(a, b, "bucket", k)
+    return _cosine_topk(joined, k)

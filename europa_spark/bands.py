@@ -29,7 +29,8 @@ pair whose EVERY shared band is hot and salted apart, is the documented
 trade against the reference's unbounded radius search (adversarial
 fixtures: tests/test_minhash.py; bench scale: tools/skew_bench.py).
 
-Incremental mode (``probes`` given): the new documents' band rows join the
+Incremental mode (``probes``, passed on by the pair functions' ``probes=``
+from streaming.delta_pairs): the new documents' band rows join the
 accumulated, capped index. A probe in a sub-cap bucket meets every member;
 a probe in a hot bucket meets the anchor plus the members of its own salted
 sub-bucket (the same salt formula, so it meets exactly the members it would

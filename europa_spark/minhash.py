@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
-from .scope import Scope
 
 
 def maybe_broadcast(df: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -312,19 +311,26 @@ def band_table(sigs: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFrame:
 
 
 def candidate_pairs(
-    bands: DataFrame, cfg: DedupConfig = CANONICAL, registry: list | None = None
+    bands: DataFrame,
+    cfg: DedupConfig = CANONICAL,
+    registry: list | None = None,
+    probes: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct candidate (url_a < url_b) pairs from band collisions: the
     band table through the skew-routed band join (bands.banded_pairs, which
-    holds the hot/mega bucket routing and its recall argument).
+    holds the hot/mega bucket routing and its recall argument). ``probes``:
+    a band table of rows in ``bands``; only pairs touching one are returned.
 
     ``registry=None`` (direct API calls): nothing is cached, the result is
     a lazy plan. Pass a registry to cache the band table and bucket stats
     across consumers and unpersist them when done (pass a Scope's
     ``frames``).
     """
-    index = bands.withColumnRenamed("band_hash", "band_key")
-    return banded_pairs(index, cfg, registry=registry)
+    index, probes = (
+        None if b is None else b.withColumnRenamed("band_hash", "band_key")
+        for b in (bands, probes)
+    )
+    return banded_pairs(index, cfg, probes=probes, registry=registry)
 
 
 def _batch_pair_jaccard(texts_a, texts_b, k: int) -> np.ndarray:
@@ -458,57 +464,17 @@ def verify_pairs(
     )
 
 
-def incremental_minhash_pairs(
-    existing_sigs: DataFrame,
-    new_reps: DataFrame,
-    cfg: DedupConfig = CANONICAL,
-    existing_pairs: DataFrame | None = None,
-    scope: Scope | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta compute for newly-arrived documents (J4/J5 resume semantics:
-    cached signatures are never recomputed, verified pairs never re-verified,
-    QdrantRepository.cs:158-182 + SimilarImageFinder.cs:303-315).
-
-    ``existing_sigs`` and the returned new_sigs are (url, extracted,
-    minhash): the state keeps the text, so verify is the batch rehash path.
-    Returns (new_sigs, new_pairs): new_pairs touches at least one new doc —
-    probes are ONLY the new docs' bands, joined against the full band index
-    (old pairs among existing docs are already in the checkpoint). The
-    index grows with the whole corpus, so its hot buckets are capped exactly
-    like the batch path (bands.banded_pairs, incremental mode). new_sigs is
-    a checkpoint that ``scope`` holds (cluster.connected_components).
-    """
-    # eager checkpoint: the minhash UDF subtree feeds four consumers (probe
-    # bands, the accumulated index union, the verify text join, and the
-    # caller's state write) — without a barrier it recomputes per consumer
-    # every micro-batch (the simhash/substring incremental paths checkpoint
-    # theirs for the same reason)
-    cols = ["url", "extracted", "minhash"]
-    new_sigs = (scope or Scope(new_reps.sparkSession)).checkpoint(
-        with_signatures(new_reps.select("url", "extracted"), cfg)
-    )
-    new_sigs.count()
-    all_sigs = existing_sigs.select(*cols).unionByName(new_sigs)
-
-    def index(sigs):
-        return band_table(sigs, cfg).withColumnRenamed("band_hash", "band_key")
-
-    cands = banded_pairs(index(all_sigs), cfg, probes=index(new_sigs))
-    if existing_pairs is not None:
-        # already-done exclusion (the MatchExcept anti-join, J4)
-        cands = cands.join(
-            existing_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
-        )
-    return new_sigs, verify_pairs(cands, all_sigs, cfg)
-
-
 def minhash_pairs(
     reps: DataFrame,
     cfg: DedupConfig = CANONICAL,
     sigs: DataFrame | None = None,
     registry: list | None = None,
+    probes: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dup path: representatives -> confirmed minhash pairs.
+
+    ``probes``: signature rows of documents in ``sigs``; only pairs that
+    touch a probe are returned (``reps`` holds the text of all of ``sigs``).
 
     ``registry=None``: nothing is cached and no job runs; the result is a
     lazy plan. Pass a registry to cache the signatures, band table,
@@ -525,7 +491,10 @@ def minhash_pairs(
             # cache, this signature cache, the repartitioned band table and
             # the bucket stats back-to-back instead of three barrier jobs.
             registry.append(sigs.persist())
-    cands = candidate_pairs(band_table(sigs, cfg), cfg, registry=registry)
+    cands = candidate_pairs(
+        band_table(sigs, cfg), cfg, registry=registry,
+        probes=None if probes is None else band_table(probes, cfg),
+    )
     if registry is not None:
         # cands is consumed three times in verify (the url prune + both pair
         # joins); it is small (LSH selectivity) — persist so the band

@@ -16,7 +16,7 @@ resume (north rule).
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,12 +33,15 @@ from .simhash import simhash_pairs
 from .substring import substring_pairs
 
 DEFAULT_METHODS = ("exact", "minhash", "substring")
-# text method -> the signature kind it pairs on (minhash.SIGNATURE_KINDS),
-# in pair-union order
-_SIGNATURE_KIND = (
-    ("minhash", "minhash"), ("substring", "fps"), ("simhash", "simhash"),
-)
-METHODS = ("exact", *(m for m, _ in _SIGNATURE_KIND))
+# text method -> (the signature kind it pairs on, minhash.SIGNATURE_KINDS;
+# its one pair function), in pair-union order. run() calls the pair function
+# as a self-join and streaming.delta_pairs calls it with probes=.
+TEXT_METHODS = {
+    "minhash": ("minhash", minhash_pairs),
+    "substring": ("fps", substring_pairs),
+    "simhash": ("simhash", simhash_pairs),
+}
+METHODS = ("exact", *TEXT_METHODS)
 
 
 def load_documents(spark: SparkSession, source: str) -> DataFrame:
@@ -187,7 +190,7 @@ def _outputs(
     pair_frames: list[DataFrame] = []
     if "exact" in methods:
         pair_frames.append(stage("pairs_exact", lambda: exact_pairs(membership)))
-    kinds = tuple(kind for m, kind in _SIGNATURE_KIND if m in methods)
+    kinds = tuple(kind for m, (kind, _) in TEXT_METHODS.items() if m in methods)
     if kinds:
         # ONE signature stage for every text method: one pandas UDF computes
         # exactly the requested kinds in a single Arrow transfer of the text
@@ -210,15 +213,10 @@ def _outputs(
             if set(methods) == set(DEFAULT_METHODS) else "signatures",
             _sigs,
         )
-        chains = (
-            ("minhash", lambda: minhash_pairs(
-                reps, cfg, sigs=sigs, registry=scope.frames)),
-            ("substring", lambda: substring_pairs(
-                reps, cfg, registry=scope.frames, fp_arrays=sigs)),
-            ("simhash", lambda: simhash_pairs(
-                None, cfg, sigs=sigs, registry=scope.frames)),
-        )
-        requested = [(f"pairs_{m}", c) for m, c in chains if m in methods]
+        requested = [
+            (f"pairs_{m}", partial(pair, reps, cfg, sigs=sigs, registry=scope.frames))
+            for m, (_, pair) in TEXT_METHODS.items() if m in methods
+        ]
         # the pair chains are independent until the pair union — submit them
         # from one driver thread each so their barrier jobs overlap instead
         # of serializing (guide §2.6: actions are only sequential because

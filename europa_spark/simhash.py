@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from .bands import banded_pairs
 from .config import DedupConfig, CANONICAL
 from .minhash import _token_hash, with_signatures
-from .scope import Scope
 
 _U64 = np.uint64
 _BIGRAM_MIX = _U64(0xC2B2AE3D27D4EB4F)
@@ -181,7 +180,35 @@ def _band_index(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def _within_radius(cands: DataFrame, cfg: DedupConfig) -> DataFrame:
+def simhash_pairs(
+    reps: DataFrame | None,
+    cfg: DedupConfig = CANONICAL,
+    sigs: DataFrame | None = None,
+    registry: list | None = None,
+    probes: DataFrame | None = None,
+) -> DataFrame:
+    """Confirmed pairs within Hamming distance cfg.simhash_hamming_d.
+
+    score = (64 - hamming) / 64; the reference's dot score is recoverable as
+    64 - 2*hamming (QdrantRepository.cs:240-247). Candidates come from the
+    skew-routed band join (bands.banded_pairs) with the signature as
+    payload, so the verify needs no signature lookup. ``probes``: signature
+    rows of documents contained in ``sigs``; only pairs that touch a probe
+    are returned (pigeonhole recall for Hamming <= d still holds: a probe
+    and its partner share a band).
+
+    ``registry=None``: nothing is cached, the result is a lazy plan; pass a
+    registry to cache the band join's intermediates across consumers (see
+    bands.banded_pairs).
+    """
+    if sigs is None:
+        # no persist: the band table cache is the signatures' only consumer
+        sigs = with_signatures(reps, cfg, kinds=("simhash",))
+    cands = banded_pairs(
+        _band_index(sigs, cfg), cfg, ["simhash"],
+        probes=None if probes is None else _band_index(probes, cfg),
+        registry=registry,
+    )
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cands.withColumn("hamming", hamming)
@@ -193,61 +220,3 @@ def _within_radius(cands: DataFrame, cfg: DedupConfig) -> DataFrame:
             ((F.lit(64) - F.col("hamming")) / F.lit(64)).alias("score"),
         )
     )
-
-
-def incremental_simhash_pairs(
-    existing_sigs: DataFrame,
-    new_reps: DataFrame,
-    cfg: DedupConfig = CANONICAL,
-    existing_pairs: DataFrame | None = None,
-    scope: Scope | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta compute for newly-arrived documents (J4/J5 resume semantics,
-    mirroring minhash/substring): cached signatures never recompute; probes
-    are ONLY the new docs' pigeonhole bands, joined against the full
-    accumulated band index (guaranteed recall for Hamming <= d, bands >=
-    d+1); confirmed pairs anti-join away.
-
-    Returns (new_sigs(url, simhash), new_pairs) — new_pairs touches at
-    least one new doc. The index grows with the whole corpus, so its hot
-    buckets (e.g. near-empty docs all hashing to simhash 0) are capped
-    exactly like the batch path (bands.banded_pairs, incremental mode).
-    new_sigs is a checkpoint that ``scope`` holds."""
-    new_sigs = (scope or Scope(new_reps.sparkSession)).checkpoint(
-        with_signatures(new_reps, cfg, kinds=("simhash",)).select("url", "simhash")
-    )
-    new_sigs.count()
-    all_sigs = existing_sigs.select("url", "simhash").unionByName(new_sigs)
-    cands = banded_pairs(
-        _band_index(all_sigs, cfg), cfg, ["simhash"], probes=_band_index(new_sigs, cfg)
-    )
-    pairs = _within_radius(cands, cfg)
-    if existing_pairs is not None:
-        pairs = pairs.join(
-            existing_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
-        )
-    return new_sigs, pairs
-
-
-def simhash_pairs(
-    reps: DataFrame | None,
-    cfg: DedupConfig = CANONICAL,
-    sigs: DataFrame | None = None,
-    registry: list | None = None,
-) -> DataFrame:
-    """Confirmed pairs within Hamming distance cfg.simhash_hamming_d.
-
-    score = (64 - hamming) / 64; the reference's dot score is recoverable as
-    64 - 2*hamming (QdrantRepository.cs:240-247). Candidates come from the
-    skew-routed band join (bands.banded_pairs) with the signature as
-    payload, so the verify needs no signature lookup.
-
-    ``registry=None``: nothing is cached, the result is a lazy plan; pass a
-    registry to cache the band join's intermediates across consumers (see
-    bands.banded_pairs).
-    """
-    if sigs is None:
-        # no persist: the band table cache is the signatures' only consumer
-        sigs = with_signatures(reps, cfg, kinds=("simhash",))
-    cands = banded_pairs(_band_index(sigs, cfg), cfg, ["simhash"], registry=registry)
-    return _within_radius(cands, cfg)

@@ -34,13 +34,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .config import CANONICAL
+from .config import CANONICAL, DedupConfig
 from .exact import content_hash_col, representatives, with_content_hash
 from .extract import split_quarantine, with_extracted
-from .minhash import incremental_minhash_pairs
+from .minhash import with_signatures
+from .pipeline import TEXT_METHODS
 from .scope import Scope
-from .simhash import incremental_simhash_pairs
-from .substring import incremental_substring_pairs
 
 DOC_SCHEMA = StructType(
     [
@@ -87,7 +86,7 @@ def _read_state(
     if not _state_path_exists(spark, path):
         return spark.createDataFrame([], schema)
     df = spark.read.parquet(path)
-    cols = [c.strip().split(" ")[0] for c in schema.split(",")]
+    cols = _columns(schema)
     if not set(cols) <= set(df.columns):
         raise ValueError(
             f"{path} holds state in an old layout, with columns {df.columns}; "
@@ -95,6 +94,10 @@ def _read_state(
             "old one cannot be resumed."
         )
     return df.filter(F.col("batch_id") < before_batch).select(*cols)
+
+
+def _columns(schema: str) -> list[str]:
+    return [c.strip().split(" ")[0] for c in schema.split(",")]
 
 
 def _read_log(spark: SparkSession, path: str) -> DataFrame:
@@ -187,31 +190,32 @@ def read_dup_log(spark: SparkSession, state_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Streaming pair dedup: the minhash, substring and simhash paths under
-# foreachBatch, one handler for all three. Each micro-batch signatures its
-# new docs once, probes the accumulated signature index with the method's
-# incremental_*_pairs (delta probes x full index, minus pairs already
-# confirmed: J4/J5 resume semantics), and appends its signature state and
-# confirmed pairs to per-batch partitions with the same exactly-once replay
-# scheme as the exact path. Near-dup state keeps the text, not shingle
-# arrays: the exact verify rehashes it like the batch path does.
+# foreachBatch, one handler for all three. Each micro-batch runs
+# delta_pairs: the method's batch pair call (pipeline.TEXT_METHODS) over the
+# accumulated index with the new docs as ``probes=``, minus pairs already
+# confirmed (J4/J5 resume semantics); it appends its signature state and
+# pairs to per-batch partitions with the exact path's exactly-once replay
+# scheme. Near-dup state keeps the text, not shingle arrays: the exact
+# verify rehashes it like the batch path does.
 # ---------------------------------------------------------------------------
 
 _PAIRS_SCHEMA = "url_a string, url_b string, score double"
 
 # method -> (signature-state dir, its schema, pair-state dir,
-#            stream-checkpoint dir, incremental pair function)
+#            stream-checkpoint dir); its pair function is in
+#            pipeline.TEXT_METHODS
 _PAIR_STATE = {
     "minhash": (
         "sigs", "url string, extracted string, minhash array<bigint>",
-        "pairs", "_stream_ckpt_nd", incremental_minhash_pairs,
+        "pairs", "_stream_ckpt_nd",
     ),
     "substring": (
         "fps", "uid bigint, url string, fps array<bigint>",
-        "sub_pairs", "_stream_ckpt_sub", incremental_substring_pairs,
+        "sub_pairs", "_stream_ckpt_sub",
     ),
     "simhash": (
         "sh_sigs", "url string, simhash bigint",
-        "sh_pairs", "_stream_ckpt_sh", incremental_simhash_pairs,
+        "sh_pairs", "_stream_ckpt_sh",
     ),
 }
 
@@ -225,13 +229,54 @@ def _pair_state(method: str) -> tuple:
     return _PAIR_STATE[method]
 
 
+def delta_pairs(
+    existing_sigs: DataFrame,
+    new_reps: DataFrame,
+    method: str,
+    cfg: DedupConfig = CANONICAL,
+    existing_pairs: DataFrame | None = None,
+    scope: Scope | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(new_sigs, new_pairs) for newly-arrived documents (J4/J5 resume
+    semantics: cached signatures are never recomputed, verified pairs never
+    re-verified, QdrantRepository.cs:158-182 + SimilarImageFinder.cs:303-315).
+
+    The signature frames are ``method``'s state layout (``_PAIR_STATE``).
+    The method's batch pair function runs over existing + new with the new
+    docs as probes, so every pair touches a new doc and hot buckets and the
+    df cap see the accumulated corpus. ``existing_pairs`` are anti-joined
+    after it: verify and the Hamming and vote filters only drop rows.
+
+    new_sigs is an eager checkpoint (probes, index, verify and the caller's
+    state write all read it). ``scope`` holds it and the pair function's
+    caches; with ``scope=None`` the pair plan is lazy."""
+    cols = _columns(_pair_state(method)[1])  # raises on an unknown method
+    kind, pair = TEXT_METHODS[method]
+    registry = scope.frames if scope is not None else None
+    scope = scope or Scope(new_reps.sparkSession)
+    new_sigs = scope.checkpoint(
+        with_signatures(new_reps, cfg, kinds=(kind,))
+        .withColumn("uid", F.xxhash64("url"))
+        .select(*cols)
+    )
+    new_sigs.count()
+    all_sigs = existing_sigs.select(*cols).unionByName(new_sigs)
+    pairs = pair(all_sigs, cfg, sigs=all_sigs, probes=new_sigs, registry=registry)
+    if existing_pairs is not None:
+        # already-done exclusion (the MatchExcept anti-join, J4)
+        pairs = pairs.join(
+            existing_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
+        )
+    return new_sigs, pairs
+
+
 def process_batch_pairs(
     batch_df: DataFrame, batch_id: int, state_dir: str, method: str, cfg=None
 ) -> None:
     """One micro-batch of incremental ``method`` pair dedup. Deterministic
     given (batch rows, state with batch_id < batch_id), so checkpoint-
     recovery replays rewrite identical partitions."""
-    sigs_dir, sigs_schema, pairs_dir, _, incremental = _pair_state(method)
+    sigs_dir, sigs_schema, pairs_dir, _ = _pair_state(method)
     cfg = cfg or CANONICAL
     spark = batch_df.sparkSession
     clean, _ = split_quarantine(with_extracted(batch_df))
@@ -243,11 +288,11 @@ def process_batch_pairs(
     existing_sigs = _read_state(spark, sigs_path, sigs_schema, batch_id)
     existing_pairs = _read_state(spark, pairs_path, _PAIRS_SCHEMA, batch_id)
     with Scope(spark) as scope:
-        new_sigs, new_pairs = incremental(
-            existing_sigs, new_reps, cfg, existing_pairs=existing_pairs,
+        new_sigs, new_pairs = delta_pairs(
+            existing_sigs, new_reps, method, cfg, existing_pairs=existing_pairs,
             scope=scope,
         )
-        new_sigs.select(*existing_sigs.columns).write.mode("overwrite").parquet(
+        new_sigs.write.mode("overwrite").parquet(
             os.path.join(sigs_path, f"batch_id={batch_id}")
         )
         new_pairs.select("url_a", "url_b", "score").write.mode("overwrite").parquet(

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig, CANONICAL
 from .minhash import with_signatures
-from .scope import Scope
 
 _U64 = np.uint64
 _ROLL_BASE = _U64(1099511628211)  # FNV prime, odd
@@ -178,7 +177,8 @@ def substring_pairs(
     cfg: DedupConfig = CANONICAL,
     max_df: int = WINNOW_MAX_DF,
     registry: list | None = None,
-    fp_arrays: DataFrame | None = None,
+    sigs: DataFrame | None = None,
+    probes: DataFrame | None = None,
 ) -> DataFrame:
     """reps(url, extracted) -> confirmed substring pairs.
 
@@ -186,17 +186,21 @@ def substring_pairs(
     equi-join -> vote count >= cfg.substring_votes (the A6 collision-counting
     aggregation, exactly the LSH shape).
 
-    ``fp_arrays``: optional precomputed (uid, url, fps) relation — the
+    ``sigs``: optional precomputed (uid, url, fps) relation — the
     pipeline passes its one signature table so the text crosses to Python
     once for every method (minhash.with_signatures); it must already be
     materialized.
+
+    ``probes``: (uid, url, fps) rows of documents in ``sigs``; only
+    pairs that touch a probe are returned. The df cap counts over the whole
+    index, so a boilerplate fingerprint stays capped as it grows.
 
     ``registry=None``: nothing is cached and no job runs; the result is a
     lazy plan. Pass a registry to cache the fingerprint relations behind
     one barrier job and unpersist them when done (see
     minhash.minhash_pairs).
     """
-    if fp_arrays is None:
+    if sigs is None:
         # the winnow kernel is the expensive part and this DAG consumes the
         # fingerprint relation three times (df-count branch + both self-join
         # sides): cache the compact (uid, url, fps) arrays once and explode
@@ -208,7 +212,7 @@ def substring_pairs(
         if registry is not None:
             registry.append(fp_arrays.persist())
     else:
-        fp_arrays = fp_arrays.select("uid", "url", "fps")
+        fp_arrays = sigs.select("uid", "url", "fps")
     id_map = fp_arrays.select("uid", "url")
     # fingerprints are np.unique'd per doc inside the kernel, so (uid, fp)
     # is already distinct — no dedup shuffle needed.
@@ -256,11 +260,32 @@ def substring_pairs(
     # corpus-proportional measured 94.7 s vs 60.5 s at 3M/32c. Both sides
     # are fp-partitioned cache reads, so the join moves zero shuffle bytes.
     surv = fps.join(rare.hint("shuffle_hash"), "fp")
-    a, b = surv.alias("a"), surv.alias("b")
+    if probes is None:
+        a, b = surv.alias("a"), surv.alias("b")
+        hits = a.join(b, "fp").filter(F.col("a.uid") < F.col("b.uid"))
+        key = [F.col("a.uid").alias("uid_a"), F.col("b.uid").alias("uid_b")]
+    else:
+        # probes are ONE batch's fingerprints, bounded per batch rather than
+        # by the accumulated corpus, so they are a safe shuffled-hash build
+        # side (surv holds only capped fps, so the join drops the rest).
+        # probe x index meets a new-vs-old pair once per shared fp and a
+        # new-vs-new pair twice (both directions): canonicalize, then
+        # distinct per fp before the vote count
+        p = probes.select("uid", F.explode("fps").alias("fp"))
+        hits = (
+            p.hint("shuffle_hash").alias("p")
+            .join(surv.alias("i"), "fp")
+            .filter(F.col("p.uid") != F.col("i.uid"))
+            .select(
+                F.least("p.uid", "i.uid").alias("uid_a"),
+                F.greatest("p.uid", "i.uid").alias("uid_b"),
+                "fp",
+            )
+            .distinct()
+        )
+        key = ["uid_a", "uid_b"]
     votes = (
-        a.join(b, "fp")
-        .filter(F.col("a.uid") < F.col("b.uid"))
-        .groupBy(F.col("a.uid").alias("uid_a"), F.col("b.uid").alias("uid_b"))
+        hits.groupBy(*key)
         .agg(F.count("*").alias("votes"))
         .filter(F.col("votes") >= cfg.substring_votes)
     )
@@ -290,81 +315,3 @@ def with_fingerprints(reps: DataFrame, cfg: DedupConfig = CANONICAL) -> DataFram
     return with_signatures(reps, cfg, kinds=("fps",)).select(
         F.xxhash64("url").alias("uid"), "url", "fps"
     )
-
-
-def incremental_substring_pairs(
-    existing_fps: DataFrame,
-    new_reps: DataFrame,
-    cfg: DedupConfig = CANONICAL,
-    max_df: int = WINNOW_MAX_DF,
-    existing_pairs: DataFrame | None = None,
-    scope: Scope | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Delta compute for newly-arrived documents (J4/J5 resume semantics,
-    mirroring minhash.incremental_minhash_pairs): cached fingerprints are
-    never recomputed; probes are ONLY the new docs' fingerprints, joined
-    against the full accumulated index; already-confirmed pairs are
-    anti-joined away.
-
-    Returns (new_fps, new_pairs): new_pairs touches at least one new doc.
-    The stop-fingerprint df-cap is evaluated over the FULL index so a
-    boilerplate fingerprint stays capped as its document frequency grows
-    across batches. new_fps is a checkpoint that ``scope`` holds.
-    """
-    cols = ["uid", "url", "fps"]
-    # eager checkpoint: the winnow UDF subtree feeds four consumers (rare
-    # count, index join side, probe join side, and the caller's state
-    # write) — without a barrier it recomputes per consumer (the same
-    # measured anti-pattern the batch path's persist().count() prevents)
-    new_fps = (scope or Scope(new_reps.sparkSession)).checkpoint(
-        with_fingerprints(new_reps, cfg)
-    )
-    new_fps.count()
-    all_fps = existing_fps.select(*cols).unionByName(new_fps.select(*cols))
-    index = all_fps.select("uid", "url", F.explode("fps").alias("fp"))
-    rare = (
-        index.groupBy("fp")
-        .count()
-        .filter((F.col("count") > 1) & (F.col("count") <= max_df))
-        .select("fp")
-    )
-    # same SHUFFLE_HASH rationale as the batch path: never sort the exploded
-    # index relation (grows with the accumulated corpus) for the df-cap join
-    # — build the per-partition map from the small rare side instead, and
-    # probe-side-build the pair join (probes are one batch's fingerprints)
-    probes = (
-        new_fps.select("uid", "url", F.explode("fps").alias("fp"))
-        .join(rare.hint("shuffle_hash"), "fp")
-    )
-    indexed = index.join(rare.hint("shuffle_hash"), "fp")
-    # (probe=new) x (index=all): new-vs-old pairs appear once per shared fp,
-    # new-vs-new twice (both directions) — canonicalize + distinct before
-    # counting votes (fps are per-doc distinct, so (a, b, fp) is unique)
-    # probes are ONE batch's fingerprints — bounded per batch, not by the
-    # accumulated corpus — so they are a safe shuffled-hash build side
-    hits = (
-        probes.hint("shuffle_hash").alias("p")
-        .join(indexed.alias("i"), "fp")
-        .filter(F.col("p.uid") != F.col("i.uid"))
-        .select(
-            F.least("p.url", "i.url").alias("url_a"),
-            F.greatest("p.url", "i.url").alias("url_b"),
-            "fp",
-        )
-        .distinct()
-    )
-    votes = (
-        hits.groupBy("url_a", "url_b")
-        .agg(F.count("*").alias("votes"))
-        .filter(F.col("votes") >= cfg.substring_votes)
-    )
-    pairs = votes.select(
-        "url_a", "url_b",
-        F.lit("substring").alias("method"),
-        F.col("votes").cast("double").alias("score"),
-    )
-    if existing_pairs is not None:
-        pairs = pairs.join(
-            existing_pairs.select("url_a", "url_b"), ["url_a", "url_b"], "left_anti"
-        )
-    return new_fps, pairs

@@ -80,3 +80,16 @@ def test_media_pair_queries_run_each_kernel_once(spark, name):
     assert _kernel_stages(spark, group.group_id) == {
         "ArrowEvalPython": 1, "MapInPandas": 1,
     }
+
+
+@pytest.mark.parametrize("name", ["embedding_dup_pairs", "ann_lsh_topk"])
+def test_ann_bucket_queries_run_the_hyperplane_udf_once(spark, name):
+    """Both sides of the hyperplane-bucket self-join read one evaluation of
+    the bucket pandas UDF (two separately projected sides ran it once per
+    side)."""
+    from europa_spark.cancel import JobGroup
+
+    group = JobGroup(spark, f"kernels-{name}")
+    with group:
+        entrymod.queries()[name](spark, SF).count()
+    assert _kernel_stages(spark, group.group_id) == {"ArrowEvalPython": 1}

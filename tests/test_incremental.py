@@ -1,14 +1,19 @@
-"""Pair-level delta compute: incremental run over (old + new) must produce
-the same pair set as a from-scratch batch run (J4/J5 resume semantics)."""
+"""Pair-level delta compute: for every text method, the delta run over
+(old + new) must produce the same pair set as a from-scratch batch run
+(J4/J5 resume semantics)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from europa_spark.config import CANONICAL
 from europa_spark.exact import representatives, with_content_hash
 from europa_spark.extract import split_quarantine, with_extracted
-from europa_spark.minhash import incremental_minhash_pairs, minhash_pairs, with_signatures
+from europa_spark.minhash import with_signatures
+from europa_spark.pipeline import TEXT_METHODS
+from europa_spark.scope import Scope
+from europa_spark.streaming import _PAIR_STATE, delta_pairs
 
 
 @pytest.fixture(scope="module")
@@ -20,35 +25,38 @@ def split_reps(spark, docs_df):
     return reps.cache(), old.cache(), new.cache()
 
 
-def test_incremental_equals_batch(spark, split_reps):
+def _rows(df) -> set:
+    return {(r["url_a"], r["url_b"], r["score"]) for r in df.collect()}
+
+
+@pytest.mark.parametrize("method", list(TEXT_METHODS))
+def test_incremental_equals_batch(spark, split_reps, method):
+    """Old pairs (a batch run over the old docs) plus delta_pairs' pairs for
+    the new docs equal a batch run over all docs, scores included."""
     reps, old, new = split_reps
-    # caller-owned caches: every frame read more than once (the signatures,
-    # old_pairs, and the band/verify intermediates behind the registry)
-    # runs its UDF subtree once
-    reg: list = []
-    try:
-        batch_pairs = {
-            (r["url_a"], r["url_b"])
-            for r in minhash_pairs(reps, registry=reg).collect()
-        }
-        old_sigs = with_signatures(old).persist()
-        reg.append(old_sigs)
-        old_pairs = minhash_pairs(old, sigs=old_sigs, registry=reg).persist()
-        reg.append(old_pairs)
-        old_set = {(r["url_a"], r["url_b"]) for r in old_pairs.collect()}
-        _, delta = incremental_minhash_pairs(
-            old_sigs, new, existing_pairs=old_pairs
+    pair = TEXT_METHODS[method][1]
+    # the scope owns every frame read more than once (the old signatures,
+    # old_pairs, and the band/verify intermediates behind its registry)
+    with Scope(spark) as scope:
+        batch = _rows(pair(reps, CANONICAL, registry=scope.frames))
+        # the old docs' signature state: a delta on an empty index
+        empty = spark.createDataFrame([], _PAIR_STATE[method][1])
+        old_sigs, _ = delta_pairs(empty, old, method, scope=scope)
+        old_pairs = scope.persist(
+            pair(old_sigs, CANONICAL, sigs=old_sigs, registry=scope.frames)
         )
-        delta_set = {(r["url_a"], r["url_b"]) for r in delta.collect()}
-    finally:
-        for f in reg:
-            f.unpersist()
+        old_rows = _rows(old_pairs)
+        _, delta = delta_pairs(
+            old_sigs, new, method, existing_pairs=old_pairs, scope=scope
+        )
+        delta_rows = _rows(delta)
+    assert batch
     # no overlap (anti-join) and exact union
-    assert not (old_set & delta_set)
-    assert old_set | delta_set == batch_pairs
+    assert not ({r[:2] for r in old_rows} & {r[:2] for r in delta_rows})
+    assert old_rows | delta_rows == batch
     # every delta pair touches a new doc
     new_urls = {r["url"] for r in new.collect()}
-    assert all(a in new_urls or b in new_urls for a, b in delta_set)
+    assert all(a in new_urls or b in new_urls for a, b, _ in delta_rows)
 
 
 def test_incremental_hot_bucket_salted_probe(spark):
@@ -68,7 +76,7 @@ def test_incremental_hot_bucket_salted_probe(spark):
     )
     new = spark.createDataFrame([("u08", text)], "url string, extracted string")
     old_sigs = with_signatures(old, cfg)
-    new_sigs, delta = incremental_minhash_pairs(old_sigs, new, cfg)
+    new_sigs, delta = delta_pairs(old_sigs, new, "minhash", cfg)
     got = {(r["url_a"], r["url_b"]) for r in delta.collect()}
     assert all("u08" in p for p in got)
     assert ("u00", "u08") in got  # star anchor edge
@@ -100,7 +108,7 @@ def test_incremental_simhash_hot_bucket_salted_probe(spark):
     """Same pin for the simhash incremental index (the r3 ADVICE #3 twin):
     hot-bucket probes pair with the anchor plus their salted sub-bucket."""
     from europa_spark.config import DedupConfig
-    from europa_spark.simhash import _band_cols, incremental_simhash_pairs
+    from europa_spark.simhash import _band_cols
 
     cfg = DedupConfig(bucket_cap=2, salt_sub_cap=2)
     text = " ".join(f"t{i}" for i in range(100))
@@ -111,7 +119,7 @@ def test_incremental_simhash_hot_bucket_salted_probe(spark):
     old_sigs = with_signatures(old, cfg, kinds=("simhash",)).select(
         "url", "simhash"
     )
-    new_sigs, delta = incremental_simhash_pairs(old_sigs, new, cfg)
+    new_sigs, delta = delta_pairs(old_sigs, new, "simhash", cfg)
     got = {(r["url_a"], r["url_b"]) for r in delta.collect()}
     assert all("u08" in p for p in got)
     assert ("u00", "u08") in got
@@ -149,5 +157,5 @@ def test_incremental_mega_bucket_star_only(spark):
         [(f"u{i:02d}", text) for i in range(8)], "url string, extracted string"
     )
     new = spark.createDataFrame([("u08", text)], "url string, extracted string")
-    _, delta = incremental_minhash_pairs(with_signatures(old, cfg), new, cfg)
+    _, delta = delta_pairs(with_signatures(old, cfg), new, "minhash", cfg)
     assert {(r["url_a"], r["url_b"]) for r in delta.collect()} == {("u00", "u08")}

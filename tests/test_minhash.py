@@ -14,13 +14,13 @@ from europa_spark.minhash import (
     _batch_shingle_hashes,
     band_table,
     candidate_pairs,
-    incremental_minhash_pairs,
     minhash_pairs,
     verify_pairs,
     with_signatures,
 )
 from europa_spark.multimodal import media_blockmean_pairs
 from europa_spark.simhash import simhash_pairs
+from europa_spark.streaming import delta_pairs
 
 
 @pytest.fixture(scope="module")
@@ -288,7 +288,7 @@ def test_verify_evaluates_each_pair_once(spark, reps, sigs):
     assert _python_evals(verify_pairs(cands, reps)) == ["MapInArrow"]
     old = sigs.filter(F.crc32("url") % 4 != 0)
     new = reps.filter(F.crc32("url") % 4 == 0)
-    _, delta = incremental_minhash_pairs(old, new)
+    _, delta = delta_pairs(old, new, "minhash")
     assert _python_evals(delta) == ["MapInArrow"]
 
 

@@ -75,44 +75,6 @@ def test_incremental_stream_dedup(spark, tmp_path):
     assert log2 == {("u2", "u1"), ("u4", "u1")}, log2
 
 
-def test_incremental_substring_matches_batch(spark):
-    """Two-batch incremental result == one-shot batch substring_pairs over
-    the union (df-cap far from binding here)."""
-    from europa_spark.substring import (
-        incremental_substring_pairs,
-        substring_pairs,
-        with_fingerprints,
-    )
-
-    block = " ".join(f"shared{i}" for i in range(90))
-    rows = [
-        ("u1", "aaa " + block + " zzz"),
-        ("u2", " ".join(f"n{i}" for i in range(110))),
-        ("u3", "bbb " + block + " qqq"),
-        ("u4", "ccc " + block + " rrr"),
-    ]
-    df = spark.createDataFrame(rows, "url string, extracted string")
-    batch = {
-        (r["url_a"], r["url_b"], r["score"])
-        for r in substring_pairs(df).collect()
-    }
-    first = df.filter(F.col("url").isin("u1", "u2"))
-    second = df.filter(F.col("url").isin("u3", "u4"))
-    fps1, pairs1 = incremental_substring_pairs(
-        first.sparkSession.createDataFrame(
-            [], "uid bigint, url string, fps array<bigint>"
-        ),
-        first,
-    )
-    fps1 = fps1.localCheckpoint()
-    inc1 = {(r["url_a"], r["url_b"], r["score"]) for r in pairs1.collect()}
-    fps2, pairs2 = incremental_substring_pairs(
-        fps1, second, existing_pairs=pairs1.select("url_a", "url_b")
-    )
-    inc = inc1 | {(r["url_a"], r["url_b"], r["score"]) for r in pairs2.collect()}
-    assert inc == batch and batch, (inc, batch)
-
-
 def test_corrupted_state_raises_not_restarts(spark, tmp_path):
     """A corrupted (existing but unreadable) state dir must RAISE, not be
     silently treated as 'first batch, empty state' — the r2 design swallowed

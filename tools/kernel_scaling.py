@@ -1,4 +1,4 @@
-"""Standalone 8-vs-32-process scaling of the hot Python kernels.
+"""Standalone N-vs-4N-process scaling of the hot Python kernels.
 
 The end-to-end ladder (tools/scaling_bench.py) attributes the aggregate
 efficiency to stages; this tool isolates the KERNELS those stages run from
@@ -16,14 +16,15 @@ Kernels measured (the exact functions the pandas UDFs call):
   * numpy_stream   — big-array copy, the DRAM bandwidth ceiling row
 
 Protocol mirrors scaling_bench.py: identical deterministic input at both
-levels, interleaved (8, 32, 8, 32) so shared-host noise hits both alike,
-best-of-N walls. Workers are warmed (one tiny batch each) before timing.
+levels, interleaved (N, 4N, N, 4N) so shared-host noise hits both alike,
+best-of walls. N is a quarter of this host's CPUs (at least 1). Workers
+are warmed (one tiny batch each) before timing.
 The pool uses fork + copy-on-write globals and index-range tasks so the
 parent process ships no data (a spawn pool funnels every task's text
 through the parent's single-threaded pickle pipe and measures the parent,
 not the kernel — Spark feeds workers per-task Arrow batches in parallel).
 
-Appends a kernel_scaling_8v32 record to BENCH/runs.jsonl and prints it.
+Appends a kernel_scaling_nv4n record to BENCH/runs.jsonl and prints it.
 """
 
 from __future__ import annotations
@@ -38,7 +39,8 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-LEVELS = (8, 32)
+_N = max(1, len(os.sched_getaffinity(0)) // 4)
+LEVELS = (_N, 4 * _N)  # N and 4N processes: (8, 32) on a 32-CPU host
 RUNS = int(os.environ.get("EUROPA_KERNEL_RUNS", "2"))
 N_DOCS = int(os.environ.get("EUROPA_KERNEL_DOCS", "100000"))
 CHUNK = 2000  # rows per task ~ an Arrow batch; same granularity Spark uses
@@ -158,16 +160,17 @@ def main() -> None:
 
     table = {}
     for name in workloads:
-        b8 = min(walls[name][8])
-        b32 = min(walls[name][32])
+        b_n = min(walls[name][LEVELS[0]])
+        b_4n = min(walls[name][LEVELS[1]])
         table[name] = {
-            "best_8": round(b8, 2),
-            "best_32": round(b32, 2),
-            "speedup_4x": round(b8 / b32, 2),
-            "efficiency": round((b8 / b32) / 4, 3),
+            "best_n": round(b_n, 2),
+            "best_4n": round(b_4n, 2),
+            "speedup_4x": round(b_n / b_4n, 2),
+            "efficiency": round((b_n / b_4n) / 4, 3),
         }
     record = {
-        "metric": "kernel_scaling_8v32",
+        "metric": "kernel_scaling_nv4n",
+        "levels": list(LEVELS),
         "value": table["pair_verify"]["efficiency"],
         "unit": "ratio",
         "kernels": table,

@@ -1,11 +1,11 @@
 """Scaling-efficiency evidence (north rule: throughput scaling >= 0.8
 between N and 4N executors; sandbox stand-in per driver instructions:
-identical job at local[8] vs local[32] on the same input).
+identical job at local[N] vs local[4N] on the same input).
 
 Protocol (BASELINE.md): fixed synthetic corpus (seed 42, t-bench rows),
 identical Spark conf at both levels (shuffle.partitions pinned to 32 so the
 physical plan is the same; only the core count differs). Runs are
-INTERLEAVED across levels (8, 32, 8, 32, ...), each in a fresh
+INTERLEAVED across levels (N, 4N, N, 4N, ...), each in a fresh
 SparkContext (same JVM, so JIT warmth carries over but storage blocks do
 not): the sandbox shares its host with other tenants, so interference is
 time-correlated — interleaving exposes both levels to the same noise
@@ -30,13 +30,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import ensure_bench_corpus  # noqa: E402
 
 RUNS = int(os.environ.get("EUROPA_SCALING_RUNS", "3"))
-# N and 4N cores; default 8-vs-32. The north rule's criterion is "N and
+# N and 4N cores; N defaults to a quarter of this host's CPUs (at least 1),
+# so a 32-CPU host measures 8-vs-32. The north rule's criterion is "N and
 # 4N executors"; any 1:4 core pairing is the sanctioned local stand-in
 # (EUROPA_SCALING_LEVELS="2,8" measures the plan in the regime where the
 # host's memory system still scales with cores - 19/111/181 GB/s at
 # 1/8/32 procs - the regime real per-executor memory systems live in).
+_N = max(1, len(os.sched_getaffinity(0)) // 4)
 LEVELS = tuple(
-    int(x) for x in os.environ.get("EUROPA_SCALING_LEVELS", "8,32").split(",")
+    int(x)
+    for x in os.environ.get("EUROPA_SCALING_LEVELS", f"{_N},{4 * _N}").split(",")
 )
 assert len(LEVELS) == 2 and LEVELS[1] == 4 * LEVELS[0], LEVELS
 # identical at both levels (same physical plan); more partitions = finer
@@ -181,7 +184,7 @@ quarantine/exact collapse).
 Protocol: identical Spark conf at both parallelism levels
 (spark.sql.shuffle.partitions={SHUFFLE_PARTS}, AQE on, Arrow batch 10k);
 only the core count differs (the sandbox stand-in for N vs 4N executors per
-driver instructions). Runs are interleaved across levels (8, 32, 8, 32, ...)
+driver instructions). Runs are interleaved across levels (N, 4N, N, 4N, ...)
 in fresh SparkContexts so time-correlated host noise hits both levels alike;
 one discarded warmup pair first (JIT + Python-worker spawn), then {RUNS}
 timed runs per level.
